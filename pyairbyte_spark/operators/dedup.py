@@ -5,11 +5,12 @@ Scale design notes (the 100 TB story):
 
 - **Exact**: one hash-groupBy shuffle on the content digest; map-side
   partial aggregation applies because the digest is computed pre-shuffle.
-- **MinHash+LSH**: per-doc signatures are a linear scan (explode →
-  groupBy doc). Banding turns all-pairs O(n²) into a self-join on
-  (band_idx, band_hash) — only same-bucket docs shuffle together. Buckets
-  are uniformly-hashed, so skew is bounded; a hot bucket (giant cluster
-  of identical docs) is handled by AQE skew-join splitting.
+- **MinHash+LSH**: per-doc signatures are one Arrow pass with no
+  shuffle (``arrow_text``). Banding turns all-pairs O(n²) into a
+  self-join on (band_idx, band_hash) — only same-bucket docs shuffle
+  together. Buckets are uniformly-hashed, so skew is bounded; a hot
+  bucket (giant cluster of identical docs) is handled by AQE skew-join
+  splitting.
 - **SimHash**: 64-bit signature per doc in one pass; near-dup candidates
   join on band substrings of the signature (4×16-bit bands → Hamming
   distance ≤ 3 guaranteed recall within bands).
@@ -19,17 +20,24 @@ Scale design notes (the 100 TB story):
 - **Embedding cosine**: see ``similarity.py``; near-dup = pairs above a
   cosine threshold.
 
-Hash choice: md5 (hex string) everywhere — engine-portable (identical
-in Spark and DuckDB), which the correctness oracle exploits. MinHash
-min() is taken over hex strings: lexicographic order on uniformly
-distributed hex is a valid uniform order, so min-hash statistics hold.
+Hash choice: md5 everywhere — engine-portable (identical in Spark and
+DuckDB), which the correctness oracle exploits. MinHash lanes are
+32-bit integers read from the digest's first 8 bytes.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyairbyte_spark.operators.arrow_text import (
+    alnum_words,
+    map_text,
+    md5_prefixes,
+    words,
+)
 from pyairbyte_spark.operators.text import normalize_text_expr
 
 # -- exact ------------------------------------------------------------------
@@ -111,16 +119,6 @@ def shingles_df(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFr
 # -- MinHash + LSH ----------------------------------------------------------
 
 
-# One Arrow pass for the whole signature (shingles + md5 lanes + the
-# per-lane min are all doc-local): no explode, no shuffle, and the
-# md5/concat work runs in C instead of JVM-interpreted HOFs (guide
-# §4.2). Output proven bit-identical to the expression pipeline on the
-# real corpus and pinned by
-# tests/test_operators.py::test_minhash_signature_arrow_matches_expression.
-# False = the explode + groupBy expression pipeline (escape hatch).
-ARROW_MINHASH_KERNEL = True
-
-
 def minhash_signature(
     df: DataFrame, text_col: str, id_col: str, *, num_hashes: int = 12, k: int = 3
 ) -> DataFrame:
@@ -130,108 +128,36 @@ def minhash_signature(
     hashing: k-wise hash families from two base hashes, so the digest
     work per shingle is constant in ``num_hashes``, not linear).
 
-    Linear: explode + groupBy(id) with min-aggregations; the explode and
-    re-group shuffle on the doc id only (shingle strings never shuffle
-    as keys). With ``ARROW_MINHASH_KERNEL`` the same values come out of
-    one mapInArrow pass with NO shuffle at all.
+    One ``arrow_text`` pass with no shuffle; the values equal the
+    ``shingles_df`` lanes min-aggregated per id. Shingles are the
+    distinct word ``k``-grams of ``normalize_text_expr(text)`` over
+    positions 1..greatest(m-k+1, 1), so a short doc emits ONE partial
+    shingle, and NULL text normalizes like '' (every row gets a
+    signature, the md5('') degenerate included). a/b are
+    conv(substring(md5, 1, 8)) / (9, 8). ``id_col`` is a row key."""
 
-    Exactness notes for the Arrow path (each decision mirrors the
-    expression pipeline bit for bit; see the equality test):
-      - normalize_text_expr = trim(regexp_replace(lower(text), '\\s+',
-        ' ')): Python str.lower() matches UTF8String.toLowerCase on
-        this pipeline's data (probed on the real corpus), Java \\s is
-        ASCII-only (explicit class), Spark trim strips 0x20 only.
-      - split(normalized, ' ') on empty input yields [''] in both
-        engines, and NULL text normalizes like '' (try_element_at
-        over a NULL array -> NULLs, concat_ws skips them): every row
-        gets a signature, including the md5('') degenerate.
-      - shingle positions run 1..greatest(m-k+1, 1): short docs emit
-        ONE partial shingle (join of all available tokens).
-      - a/b = conv(substring(md5_hex, 1, 8)) / (9, 8) = the first and
-        second 4 bytes of the digest, min'd per lane mod 2^32.
+    lanes = np.arange(num_hashes, dtype=np.uint32).reshape(-1, 1)
 
-    Precondition (both paths, now explicit): ``id_col`` is a row key.
-    The expression pipeline's groupBy would MERGE duplicate-id rows
-    into one mashed signature — never meaningful — where the Arrow
-    path emits one signature per row; every caller (index build /
-    append / sync derivations, candidate mining) feeds key-unique
-    frames, and the one duplicate-id regime (out-of-band duplicate
-    appends) takes the netted index-side fallback that never calls
-    this function.
-    """
-    if ARROW_MINHASH_KERNEL:
-        return _minhash_signature_arrow(
-            df, text_col, id_col, num_hashes=num_hashes, k=k
+    def emit(t):
+        toks = list(filter(None, words(t, lower=True))) or [b""]
+        m = len(toks) - k + 1
+        shingles = (
+            {b" ".join(toks[p : p + k]) for p in range(m)}
+            if m >= 1
+            else {b" ".join(toks)}
         )
-    exploded = shingles_df(df, text_col, id_col, k)
-    # Parsed SQL strings, not Column-API composition: this builder runs
-    # 2-4x per index lifecycle and the per-F.* py4j round-trips were
-    # ~0.3s of pure driver-side plan construction per call (the parsed
-    # expressions are identical).
-    lanes = exploded.selectExpr(
-        f"`{id_col}`",
-        "CAST(conv(substring(md5(shingle), 1, 8), 16, 10) AS BIGINT) AS a",
-        "CAST(conv(substring(md5(shingle), 9, 8), 16, 10) AS BIGINT) AS b",
+        h = md5_prefixes(shingles, 64)
+        a = (h >> np.uint64(32)).astype(np.uint32)
+        b = h.astype(np.uint32)  # the low lane; uint32 math wraps mod 2^32
+        return ([(a + lanes * b).min(axis=1).tolist()],)
+
+    return map_text(
+        df,
+        F.coalesce(F.col(text_col), F.lit("")),
+        [id_col],
+        [("sig", pa.list_(pa.int64()))],
+        lambda: emit,
     )
-    aggs = [
-        F.expr(f"min((a + {i} * b) % 4294967296)").alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = lanes.groupBy(id_col).agg(*aggs)
-    return sig.selectExpr(
-        f"`{id_col}`",
-        f"array({', '.join(f'h{i}' for i in range(num_hashes))}) AS sig",
-    )
-
-
-def _minhash_signature_arrow(
-    df: DataFrame, text_col: str, id_col: str, *, num_hashes: int, k: int
-) -> DataFrame:
-    """Arrow-kernel body of :func:`minhash_signature` — one batch pass,
-    ids passed through untouched (no per-row Python on the id column,
-    original type preserved)."""
-    import re as _re
-
-    id_ddl = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        ws_sub = _re.compile(r"[ \t\n\x0b\f\r]+").sub
-        md5 = hashlib.md5
-        lanes = np.arange(num_hashes, dtype=np.int64).reshape(-1, 1)
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            sigs: list = []
-            for t in texts:
-                norm = ws_sub(" ", (t or "").lower()).strip(" ")
-                toks = norm.encode("utf-8").split(b" ")
-                m = len(toks) - k + 1
-                shingles = (
-                    {b" ".join(toks[p : p + k]) for p in range(m)}
-                    if m >= 1
-                    else {b" ".join(toks)}
-                )
-                ab = np.frombuffer(
-                    b"".join(md5(s).digest()[:8] for s in shingles),
-                    dtype=">u4",
-                ).astype(np.int64)
-                a, b = ab[0::2], ab[1::2]
-                sigs.append(
-                    ((a + lanes * b) % 4294967296).min(axis=1).tolist()
-                )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(sigs, type=pa.list_(pa.int64()))],
-                names=["__id", "sig"],
-            )
-
-    out = df.select(F.col(id_col), F.col(text_col)).mapInArrow(
-        kernel, f"__id {id_ddl}, sig array<bigint>"
-    )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def lsh_bands(
@@ -642,66 +568,18 @@ def ngram_duplication_coverage(
     documents with at least one n-gram (≥ n tokens); higher fraction =
     more duplicated content.
 
-    Scale: gram construction is per-row JVM array arithmetic (no
-    explode until the distinct gram set, which is ≤ tokens per doc);
-    then ONE gram-keyed aggregate (map-side combine) and one join
-    back — the same two-shuffle shape as TF-IDF. Grams hash to 60-bit
-    ints (md5 prefix — identical in both engines, so the oracle
-    counts the same keys; contamination_check's trick) right after
-    the explode, so the aggregate and the join back shuffle 8-byte
-    longs instead of ~50-byte gram strings — measured 537s → 43s at
-    125k replicated docs, and the gap widens with corpus size.
+    Scale: one ``ngram_hash_rows`` pass emits each doc's distinct
+    grams (≤ tokens per doc), then ONE gram-keyed aggregate (map-side
+    combine) and one join back — the same two-shuffle shape as TF-IDF.
+    Grams are 60-bit ints (md5 prefix — identical in both engines, so
+    the oracle counts the same keys; contamination_check's trick), so
+    the aggregate and the join back shuffle 8-byte longs instead of
+    ~50-byte gram strings — measured 537s → 43s at 125k replicated
+    docs, and the gap widens with corpus size.
     Collisions merge grams identically in both engines (60-bit space;
     negligible and oracle-exact either way).
     """
-    # LET-BINDING via a 1-element-array transform: the token array is
-    # a BOUND lambda variable, so it evaluates exactly once per row no
-    # matter what the optimizer does. A plain projection alias is NOT
-    # safe — CollapseProject can inline it into the gram lambda, where
-    # interpreted HOF evaluation re-runs the regex tokenizer once per
-    # gram × per element (caught live in a thread dump: StringSplit
-    # re-splitting the document ~400× per row; >600s at 125k docs vs
-    # ~30s with the binding). md5 hashing happens AFTER the explode,
-    # where it is codegen'd, not interpreted.
-    if ARROW_NGRAM_KERNEL:
-        # One Arrow pass builds the identical distinct (id, 60-bit
-        # md5-prefix) rows at C speed (guide §4.2) — multiset equality
-        # with the expression pipeline below is pinned by
-        # tests/test_operators.py::test_ngram_hash_rows_matches_expression_paths.
-        g = ngram_hash_rows(
-            docs, text_col, id_col, n, tokens="alnum", distinct=True
-        )
-    else:
-        toks_expr = F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-            lambda t: t != "",
-        )
-
-        def _grams(tk):
-            gram = lambda i: F.concat_ws(  # noqa: E731
-                " ", *[F.try_element_at(tk, i + j) for j in range(n)]
-            )
-            return F.when(
-                F.size(tk) >= n,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)), gram
-                    )
-                ),
-            )
-
-        grams = F.element_at(F.transform(F.array(toks_expr), _grams), 1)
-        g = (
-            docs.select(F.col(id_col).alias("id"), grams.alias("g"))
-            .filter(F.col("g").isNotNull())
-            .select("id", F.explode("g").alias("gram_s"))
-            .select(
-                "id",
-                F.conv(F.substring(F.md5(F.col("gram_s")), 1, 15), 16, 10)
-                .cast("bigint")
-                .alias("gram"),
-            )
-        )
+    g = ngram_hash_rows(docs, text_col, id_col, n, tokens="alnum", distinct=True)
     df_count = g.groupBy("gram").agg(F.count(F.lit(1)).alias("nd"))
     return (
         g.join(df_count, "gram")
@@ -721,30 +599,6 @@ def ngram_duplication_coverage(
     )
 
 
-# -- Arrow n-gram hash kernel ------------------------------------------------
-# The gram build is the measured compute floor of the contamination /
-# ngram-dup rows at sf1 (~5-7s of interpreted-HOF concat per gram
-# position even after the let-binding fix). One mapInArrow pass hands
-# whole batches to C-speed hashlib instead (guide §4.2: let Spark do
-# distribution, hand batches to native code), emitting the IDENTICAL
-# 60-bit md5-prefix values — the cross-engine collision guarantee the
-# oracles document is preserved because the BYTES hashed are the same.
-# Exactness notes, pinned by tests/probe equality on the real corpus:
-#   - "ws" tokens replicate split(trim(text), '\\s+'): Spark trim
-#     strips 0x20 only; Java \s is ASCII-only — hence the explicit
-#     byte class, applied to the UTF-8 bytes Spark's md5 hashes.
-#   - "alnum" tokens replicate filter(split(lower(text),
-#     '[^a-z0-9]+'), t != ''): Python str.lower() matches
-#     UTF8String.toLowerCase on this pipeline's data (probed), and the
-#     ASCII regex class behaves identically on str and bytes.
-#   - int.from_bytes(digest[:8]) >> 4 == conv(substring(md5, 1, 15),
-#     16, 10): the top 60 bits of the digest.
-# False = the expression pipeline (the equality escape hatch).
-ARROW_NGRAM_KERNEL = True
-
-_WS_RE = rb"[ \t\n\x0b\f\r]+"  # Java regex \s, byte-wise
-
-
 def ngram_hash_rows(
     df: DataFrame,
     text_col: str,
@@ -754,65 +608,26 @@ def ngram_hash_rows(
     tokens: str = "ws",
     distinct: bool = False,
 ) -> DataFrame:
-    """Exploded (id, gram) rows — gram the 60-bit md5 prefix of each
-    token ``n``-gram — in one Arrow pass. ``tokens="ws"`` mirrors
-    ``ngrams_expr`` (whitespace split of trimmed text, every
-    position); ``tokens="alnum"`` mirrors the ngram-dup tokenizer
-    (lowercased non-alphanumeric split, empties dropped); ``distinct``
-    emits each gram once per id (``array_distinct`` parity)."""
-    import re as _re
+    """Exploded (id: long, gram) rows -- gram the 60-bit md5 prefix of
+    each token ``n``-gram -- in one ``arrow_text`` pass.
+    ``tokens="ws"`` mirrors ``text.ngrams_expr`` (whitespace split of
+    trimmed text, every position); ``tokens="alnum"`` mirrors the
+    ngram-dup tokenizer (lowercased non-alphanumeric split, empties
+    dropped); ``distinct`` emits each gram once per id
+    (``array_distinct`` parity). The grams hash the same bytes Spark's
+    ``conv(substring(md5(gram), 1, 15), 16, 10)`` does, so the oracles'
+    cross-engine collision guarantee holds."""
+    tokenize = words if tokens == "ws" else alnum_words
 
-    ws = tokens == "ws"
+    def emit(t):
+        toks = tokenize(t)
+        grams = [b" ".join(toks[p : p + n]) for p in range(len(toks) - n + 1)]
+        if distinct:
+            grams = dict.fromkeys(grams)
+        return (md5_prefixes(grams, 60).tolist(),)
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        split_ws = _re.compile(_WS_RE).split
-        split_alnum = _re.compile(r"[^a-z0-9]+").split
-        md5 = hashlib.md5
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_i: list = []
-            out_g: list = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                if ws:
-                    toks = split_ws(t.encode("utf-8").strip(b" "))
-                else:
-                    toks = [
-                        w.encode("utf-8")
-                        for w in split_alnum(t.lower())
-                        if w != ""
-                    ]
-                m = len(toks) - n + 1
-                if m < 1:
-                    continue
-                grams = [
-                    b" ".join(toks[p : p + n]) for p in range(m)
-                ]
-                if distinct:
-                    grams = list(dict.fromkeys(grams))
-                out_i.extend([i] * len(grams))
-                out_g.extend(
-                    int.from_bytes(md5(g).digest()[:8], "big") >> 4
-                    for g in grams
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_i, type=pa.int64()),
-                    pa.array(out_g, type=pa.int64()),
-                ],
-                names=["id", "gram"],
-            )
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("t")
-    )
-    return src.mapInArrow(kernel, "id long, gram long")
+    src = df.select(F.col(id_col).cast("long").alias("id"), F.col(text_col))
+    return map_text(src, text_col, ["id"], [("gram", pa.int64())], lambda: emit)
 
 
 # -- persisted MinHash-LSH index (dedup at ingest) ---------------------------
@@ -855,8 +670,8 @@ def build_minhash_index(
       probes are bit-compatible with the build without the caller
       re-stating them.
 
-    Build cost is the batch miner's signature pass (one shuffle on the
-    doc id); probe cost is O(touched buckets), not O(corpus). Returns
+    Build cost is the batch miner's signature pass (one Arrow pass, no
+    shuffle); probe cost is O(touched buckets), not O(corpus). Returns
     ``{"n_docs", "files"}``.
     """
     spark = corpus.sparkSession

@@ -35,9 +35,13 @@ layout follows the standard IR textbook inverted file.
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyairbyte_spark.operators.arrow_text import map_text, words
 from pyairbyte_spark.operators.text import tokens_expr
 
 __all__ = [
@@ -53,98 +57,39 @@ __all__ = [
 ]
 
 
-# One Arrow pass for the postings build (tokenize + per-doc term
-# counts are all doc-local): no explode, no (token, id) shuffle, and
-# the tokenization runs in C instead of JVM-interpreted HOF lower()
-# per token (guide §4.2, §2.1). Values proven identical to the
-# expression pipeline on the real corpus; pinned by
-# tests/test_text_index.py::test_postings_arrow_matches_expression.
-# False = the explode + groupBy expression pipeline (escape hatch).
-ARROW_POSTINGS_KERNEL = True
-
-_WS_SPLIT = r"[ \t\n\x0b\f\r]+"  # Java regex \s, the class Spark applies
-
-
 def _postings(
     docs: DataFrame, text_col: str, id_col: str, *, sign: int = 1
 ) -> DataFrame:
     """(token, id, tf, dl, sign) rows — lowercased whitespace tokens,
-    the same tokenization every text operator (and the oracle) uses.
-    Docs with zero tokens produce no postings but still count in
-    stats. ``sign=-1`` emits TOMBSTONES: incremental maintenance
-    retracts a doc's old postings by appending its postings negated
-    (the IVM sign trick) — probes fold sum(sign·tf)/sum(sign·dl) per
-    (token, doc), so a retract+reinsert pair nets to the new state
+    the same tokenization every text operator (and the oracle) uses,
+    counted per doc in one ``arrow_text`` pass with no shuffle (the
+    explode of ``lower`` tokens grouped by (token, id), row for row).
+    Empty text is one '' token (dl=1); NULL text has no postings; both
+    still count in stats. ``sign=-1`` emits TOMBSTONES: incremental
+    maintenance retracts a doc's old postings by appending its postings
+    negated (the IVM sign trick) — probes fold sum(sign·tf)/sum(sign·dl)
+    per (token, doc), so a retract+reinsert pair nets to the new state
     with appends only (full txn-group atomicity, zero rewrites).
+    ``id_col`` is a row key."""
 
-    With ``ARROW_POSTINGS_KERNEL`` the same rows come out of one
-    mapInArrow pass with NO shuffle: per-token lower() matches
-    Python's per-token str.lower() (both Unicode default case
-    conversion — probed on the real corpus incl. final-sigma and
-    dotted-I), Spark trim strips 0x20 only, Java \\s is ASCII-only,
-    and split('') == ['']. NULL text drops the row in both paths
-    (explode of a NULL array / explicit skip). Like
-    ``dedup.minhash_signature``, ``id_col`` is a row key by
-    precondition: the expression groupBy would merge duplicate-id
-    rows (with a nondeterministic first(dl)) where the kernel emits
-    per-row postings — every caller feeds key-unique frames, and
-    probes fold sum(sign·tf) per (token, doc) either way."""
-    if ARROW_POSTINGS_KERNEL:
-        import re as _re
+    def emit(t):
+        toks = words(t, lower=True)
+        counts = Counter(toks)
+        return counts.keys(), counts.values(), [len(toks)] * len(counts)
 
-        id_ddl = docs.schema[id_col].dataType.simpleString()
-        ws = _re.compile(_WS_SPLIT)
-
-        def kernel(batches):
-            from collections import Counter
-
-            import pyarrow as pa
-
-            split = ws.split
-            for batch in batches:
-                ids = batch.column(0).to_pylist()
-                texts = batch.column(1).to_pylist()
-                o_tok: list = []
-                o_id: list = []
-                o_tf: list = []
-                o_dl: list = []
-                for i, txt in zip(ids, texts):
-                    if txt is None:
-                        continue
-                    toks = [w.lower() for w in split(txt.strip(" "))]
-                    counts = Counter(toks)
-                    o_tok.extend(counts.keys())
-                    o_id.extend([i] * len(counts))
-                    o_tf.extend(counts.values())
-                    o_dl.extend([len(toks)] * len(counts))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(o_tok, type=pa.string()),
-                        pa.array(o_id, type=batch.column(0).type),
-                        pa.array(o_tf, type=pa.int64()),
-                        pa.array(o_dl, type=pa.int64()),
-                    ],
-                    names=["token", "id", "tf", "dl"],
-                )
-
-        out = docs.select(F.col(id_col), F.col(text_col)).mapInArrow(
-            kernel, f"token string, id {id_ddl}, tf long, dl long"
-        )
-        return out.withColumn("sign", F.lit(int(sign)).cast("long"))
-    base = docs.select(
+    out = map_text(
+        docs,
+        text_col,
+        [id_col],
+        [("token", pa.string()), ("tf", pa.int64()), ("dl", pa.int64())],
+        lambda: emit,
+    )
+    return out.select(
+        "token",
         F.col(id_col).alias("id"),
-        F.transform(tokens_expr(text_col), lambda t: F.lower(t)).alias(
-            "__lt"
-        ),
-    ).select("id", F.size("__lt").cast("long").alias("dl"), "__lt")
-    return (
-        base.select("id", "dl", F.explode("__lt").alias("token"))
-        .groupBy("token", "id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("tf"),
-            F.first("dl").alias("dl"),
-        )
-        .withColumn("sign", F.lit(int(sign)).cast("long"))
+        "tf",
+        "dl",
+        F.lit(int(sign)).cast("long").alias("sign"),
     )
 
 

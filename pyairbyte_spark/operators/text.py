@@ -2,7 +2,8 @@
 fingerprinting.
 
 All pure ``pyspark.sql.functions`` expression trees — they stay inside
-whole-stage codegen and scale linearly with no shuffle (per-row maps).
+whole-stage codegen and scale linearly with no shuffle (per-row maps) —
+except :func:`token_bucket_counts`, an ``arrow_text`` kernel.
 Every operator has an equivalent ANSI-SQL rendering for the DuckDB
 oracle (see ``pyairbyte_spark.queries``), so numeric definitions below
 deliberately use engine-portable primitives (md5, regexp, fold).
@@ -10,8 +11,13 @@ deliberately use engine-portable primitives (md5, regexp, fold).
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pyairbyte_spark.operators.arrow_text import map_text, md5_prefixes, words
 
 # Small multilingual stopword/marker sets (public common words).
 LANG_MARKERS: dict[str, list[str]] = {
@@ -36,32 +42,6 @@ def tokens_expr(col: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-# -- Arrow token-bucket histogram kernel -------------------------------------
-# The DSIR importance-weight row pays an explode of every token plus a
-# JVM md5 per token OCCURRENCE, and the plan runs that subtree twice
-# (once for the bucket-count aggregation, once for the per-doc fold).
-# Tokenize + hash + per-doc bucket counts are all doc-local, so one
-# mapInArrow pass emits the equivalent per-doc HISTOGRAM rows
-# (id, carry.., bucket, cnt) with no explode and at most n_buckets
-# rows per doc — every downstream shuffle moves bucket counts, not
-# token occurrences (guide §4.2, §2.3). Exactness notes (pinned by
-# tests/test_operators.py::test_token_bucket_counts_matches_expression):
-#   - tokens replicate explode(split(trim(lower(text)), '\\s+')) with
-#     w != '': Python str.lower() matches UTF8String.toLowerCase on
-#     this pipeline's data (probed — same guarantee the ngram/postings
-#     kernels rely on), Spark trim strips 0x20 only, Java \s is the
-#     ASCII class applied byte-wise.
-#   - int.from_bytes(digest[:4]) % n == pmod(conv(substring(md5(w),
-#     1, 8), 16, 10), n): the top 32 bits of the digest, nonnegative.
-# Downstream folds stay exact: sum(cnt) == count(*) over terms, and
-# sum(cnt × lr) in DECIMAL == the per-term decimal sum (integer ×
-# decimal multiplication is exact, decimal addition is exact and
-# order-independent). False = the expression path (escape hatch).
-ARROW_BUCKET_KERNEL = True
-
-_WS_BYTES = rb"[ \t\n\x0b\f\r]+"  # Java regex \s, byte-wise
-
-
 def token_bucket_counts(
     docs: DataFrame,
     text_col: str,
@@ -71,72 +51,35 @@ def token_bucket_counts(
     n_buckets: int = 512,
 ) -> DataFrame:
     """Per-doc hashed-token bucket histogram ``(id, carry.., b, cnt)``
-    in one Arrow pass: bucket = first-32-md5-bits(token) % n_buckets
-    over lowercased whitespace tokens, cnt = occurrences in the doc.
-    NULL text yields no rows (explode-of-NULL parity)."""
-    import re as _re
+    in one ``arrow_text`` pass: bucket = first-32-md5-bits(token) %
+    n_buckets over the nonempty tokens of ``split(trim(lower(text)),
+    '\\s+')``, cnt = occurrences in the doc — at most ``n_buckets``
+    rows per doc where the explode formulation moves one row per token
+    occurrence. Downstream folds stay exact: sum(cnt) == count(*) over
+    terms, and sum(cnt × lr) in DECIMAL == the per-term decimal sum.
+    Docs without a nonempty token (NULL text included) yield no rows."""
 
-    carry = list(carry or [])
-    ws_split = _re.compile(_WS_BYTES).split
-    ncol = 2 + len(carry)
+    def make_emit():
+        memo: dict = {}  # token -> bucket, per batch
 
-    def kernel(batches):
-        from collections import Counter
-        import hashlib
+        def emit(t):
+            toks = list(filter(None, words(t, lower=True)))
+            new = set(toks).difference(memo)
+            if new:
+                b = md5_prefixes(new, 32) % n_buckets
+                memo.update(zip(new, b.tolist()))
+            counts = Counter(map(memo.__getitem__, toks))
+            return counts.keys(), counts.values()
 
-        import pyarrow as pa
+        return emit
 
-        md5 = hashlib.md5
-        fb = int.from_bytes
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            carried = [
-                batch.column(j).to_pylist() for j in range(2, ncol)
-            ]
-            out_id: list = []
-            out_carry: list[list] = [[] for _ in carried]
-            out_b: list = []
-            out_c: list = []
-            memo: dict = {}
-            for row, (i, t) in enumerate(zip(ids, texts)):
-                if t is None:
-                    continue
-                counts = Counter()
-                for w in ws_split(t.lower().encode("utf-8").strip(b" ")):
-                    if w == b"":
-                        continue
-                    b = memo.get(w)
-                    if b is None:
-                        b = fb(md5(w).digest()[:4], "big") % n_buckets
-                        memo[w] = b
-                    counts[b] += 1
-                if not counts:
-                    continue
-                out_id.extend([i] * len(counts))
-                for vals, col in zip(out_carry, carried):
-                    vals.extend([col[row]] * len(counts))
-                out_b.extend(counts.keys())
-                out_c.extend(counts.values())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=batch.column(0).type),
-                    *[
-                        pa.array(vals, type=batch.column(2 + j).type)
-                        for j, vals in enumerate(out_carry)
-                    ],
-                    pa.array(out_b, type=pa.int64()),
-                    pa.array(out_c, type=pa.int64()),
-                ],
-                names=[id_col, *carry, "b", "cnt"],
-            )
-
-    sel = docs.select(id_col, text_col, *carry)
-    ddl = ", ".join(
-        f"{c} {docs.schema[c].dataType.simpleString()}"
-        for c in [id_col, *carry]
+    return map_text(
+        docs,
+        text_col,
+        [id_col, *(carry or [])],
+        [("b", pa.int64()), ("cnt", pa.int64())],
+        make_emit,
     )
-    return sel.mapInArrow(kernel, f"{ddl}, b long, cnt long")
 
 
 def token_count_expr(col: Column | str) -> Column:

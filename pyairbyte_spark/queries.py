@@ -3935,41 +3935,20 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp(weight) tilts a 100 TB crawl toward the target domain without
     training a classifier.
 
-    Scale shape: one explode (map-side), two 512-key aggregations
-    (map-side partial combine does almost all the work), a broadcast
-    of the 512-row ratio table, and ONE real shuffle (groupBy doc_id).
-    No UDFs; the ln/round/decimal arithmetic is JVM-side.
+    Scale shape: one Arrow pass (per-doc bucket histograms), two
+    512-key aggregations (map-side partial combine does almost all the
+    work), a broadcast of the 512-row ratio table, and ONE real shuffle
+    (groupBy doc_id). The ln/round/decimal arithmetic is JVM-side.
     """
     from pyairbyte_spark.operators import text as text_ops
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    if text_ops.ARROW_BUCKET_KERNEL:
-        # One Arrow pass emits per-doc bucket HISTOGRAMS (doc_id,
-        # lang, b, cnt): no explode, md5 at C speed once per distinct
-        # token per batch, and both downstream passes move bucket
-        # counts instead of token occurrences. Values proven identical
-        # (sum(cnt) == count(*); decimal cnt×lr sum == per-term sum) —
-        # pinned by test_token_bucket_counts_matches_expression.
-        hist = text_ops.token_bucket_counts(
-            docs, "text", "doc_id", carry=["lang"], n_buckets=512
-        )
-    else:
-        terms = docs.select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("w"),
-        ).filter(F.col("w") != "")
-        b = F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col("w")), 1, 8), 16, 10
-            ).cast("bigint"),
-            F.lit(512),
-        )
-        hist = terms.select(
-            "doc_id", "lang", b.alias("b"), F.lit(1).cast("long").alias("cnt")
-        )
+    # One Arrow pass emits per-doc bucket HISTOGRAMS (doc_id, lang, b,
+    # cnt): no explode, and both downstream passes move bucket counts
+    # instead of token occurrences.
+    hist = text_ops.token_bucket_counts(
+        docs, "text", "doc_id", carry=["lang"], n_buckets=512
+    )
     # ONE 512-key aggregation computes the raw AND target counts (was
     # three separate aggregations, each re-running the explode+hash
     # over the whole corpus — 4 full passes counting the final join;
@@ -4067,7 +4046,6 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 60-bit md5-prefix hash BEFORE the distinct: every downstream
     # shuffle carries 8-byte longs instead of shingle strings
     # (mirrored in the oracle so counts stay exact).
-    sh = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("bigint")
     # ONE linear pipeline — no self-join, no recomputation. The naive
     # bench ⋈ corpus formulation references the shingle frame three
     # times (benchmark set, totals, hits), and Spark recomputes the
@@ -4079,18 +4057,9 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("sh")
     from pyairbyte_spark.operators import dedup as _dd
 
-    if _dd.ARROW_NGRAM_KERNEL:
-        # One Arrow pass builds the identical 60-bit md5-prefix grams
-        # at C speed (multiset equality with the expression pipeline
-        # pinned by test + probe; the escape hatch keeps the
-        # expression path below).
-        pairs = _dd.ngram_hash_rows(docs, "text", "doc_id", 5).select(
-            F.col("id").alias("doc_id"), F.col("gram").alias("sh")
-        )
-    else:
-        pairs = docs.select(
-            "doc_id", F.explode(text.ngrams_expr("text", 5)).alias("s")
-        ).select("doc_id", sh.alias("sh"))
+    pairs = _dd.ngram_hash_rows(docs, "text", "doc_id", 5).select(
+        F.col("id").alias("doc_id"), F.col("gram").alias("sh")
+    )
     shingles = (
         pairs
         # Repartition by sh BEFORE the distinct: hashpartitioning(sh)

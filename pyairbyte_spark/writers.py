@@ -48,6 +48,11 @@ from pyairbyte_spark.strategies import WriteMethod
 
 BUCKET_COL = "__pk_bucket"
 
+# Most commits one grouped change-feed append scan covers: the scan maps
+# every entry dir of its run to a commit version in one literal
+# create_map, which must stay bounded on an unbounded replay.
+CDF_APPEND_RUN_MAX = 500
+
 # Commit ops that move bytes or metadata but NEVER rows: the snapshot
 # relation is identical on both sides of such a commit by construction.
 # The CDF planner (`_changes_for_step`) and the collapse planner
@@ -5247,8 +5252,9 @@ class CommitLogTableStore(TableStore):
         # physically one multi-dir read. Runs split on anything that
         # isn't a provably-plain append (other ops, schema/mapping
         # drift, DVs, bucketed or cloned entries) — those keep the
-        # per-commit path unchanged. Rows, _change_type and per-row
-        # _commit_version are identical by construction.
+        # per-commit path unchanged — and at CDF_APPEND_RUN_MAX commits.
+        # Rows, _change_type and per-row _commit_version are identical
+        # by construction.
         run: list[tuple[int, list[dict]]] = []
         run_sig = None
 
@@ -5271,7 +5277,7 @@ class CommitLogTableStore(TableStore):
             grouped = self._cdf_groupable_append(table_name, v)
             if grouped is not None:
                 sig, entries = grouped
-                if run and sig != run_sig:
+                if run and (sig != run_sig or len(run) >= CDF_APPEND_RUN_MAX):
                     _flush_run()
                 run.append((v, entries))
                 run_sig = sig

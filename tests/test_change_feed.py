@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pyairbyte_spark import writers
 from pyairbyte_spark.writers import CommitLogTableStore
 
 
@@ -186,7 +187,7 @@ def _all_changes(df):
 
 
 @pytest.mark.slow
-def test_grouped_append_steps_match_per_commit_path(spark, store):
+def test_grouped_append_steps_match_per_commit_path(spark, store, monkeypatch):
     """Adjacent plain appends fold into one grouped scan; rows, tags,
     versions and column order must be identical to the per-commit
     formulation (the equality escape hatch: grouping disabled)."""
@@ -227,6 +228,23 @@ def test_grouped_append_steps_match_per_commit_path(spark, store):
         nc, nr = _all_changes(store.read_changes("t", fv))
         oc, orows = _all_changes(store.read_changes("t", fv))
         assert (nc, nr) == (oc, orows)
+    # a run longer than CDF_APPEND_RUN_MAX splits into several grouped
+    # scans, each within the cap
+    for i in range(10, 17):
+        store.write_append(
+            _df(spark, [(i, f"x{i}")]).withColumnRenamed("v", "w"), "t"
+        )
+    monkeypatch.setattr(writers, "CDF_APPEND_RUN_MAX", 3)
+    runs = []
+    step = CommitLogTableStore._grouped_append_step
+
+    def spy(self, table_name, run, sig):
+        runs.append(len(run))
+        return step(self, table_name, run, sig)
+
+    monkeypatch.setattr(CommitLogTableStore, "_grouped_append_step", spy)
+    assert snap(False) == snap(True)
+    assert len(runs) > 1 and max(runs) <= 3, runs
 
 
 def test_grouped_append_window_plans_one_scan(spark, store):

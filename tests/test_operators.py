@@ -772,180 +772,6 @@ def test_ngram_duplication_coverage_hand_checked(spark):
     assert out[3]["n_dup_grams"] == 0 and out[3]["dup_fraction"] == 0.0
 
 
-def test_ngram_hash_rows_matches_expression_paths(spark):
-    """The Arrow n-gram kernel must emit the EXACT (id, 60-bit md5
-    prefix) multiset of both expression pipelines it replaces — the
-    cross-engine collision guarantee the oracles rely on. Adversarial
-    text: tabs/newlines/CR (Java \\s is ASCII-only), leading/trailing
-    whitespace (Spark trim strips 0x20 only), multi-byte UTF-8,
-    uppercase+digits+punctuation (alnum tokenizer), short docs, empty
-    strings, and NULLs."""
-    from pyspark.sql import functions as F
-
-    from pyairbyte_spark.operators import text
-    from pyairbyte_spark.operators.dedup import ngram_hash_rows
-
-    rows = [
-        (1, "one two three four five six seven"),
-        (2, "\tone  two\nthree\rfour\x0bfive\x0csix "),
-        (3, " naïve café über 東京 123 ABC one two "),
-        (4, "Short doc"),
-        (5, ""),
-        (6, None),
-        (7, "a-b,c.d!e?f:g;h (i) [j] {k} 1a2b3c"),
-        (8, "repeat repeat repeat repeat repeat repeat repeat"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    def multiset(df, cols):
-        return sorted(tuple(r) for r in df.select(*cols).collect())
-
-    # ws mode vs ngrams_expr (contamination_check's pair build)
-    sh = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("bigint")
-    for n in (2, 5):
-        expr_ws = docs.select(
-            "doc_id", F.explode(text.ngrams_expr("text", n)).alias("s")
-        ).select("doc_id", sh.alias("sh"))
-        kern_ws = ngram_hash_rows(docs, "text", "doc_id", n)
-        assert multiset(kern_ws, ["id", "gram"]) == multiset(
-            expr_ws, ["doc_id", "sh"]
-        ), f"ws mode n={n}"
-
-    # alnum+distinct mode vs ngram_duplication_coverage's gram build
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != ""
-    )
-    n = 3
-    gram = lambda tk, i: F.concat_ws(  # noqa: E731
-        " ", *[F.try_element_at(tk, i + j) for j in range(n)]
-    )
-    grams = F.element_at(
-        F.transform(
-            F.array(toks),
-            lambda tk: F.when(
-                F.size(tk) >= n,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)),
-                        lambda i: gram(tk, i),
-                    )
-                ),
-            ),
-        ),
-        1,
-    )
-    expr_al = (
-        docs.select("doc_id", grams.alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select("doc_id", F.explode("g").alias("s"))
-        .select("doc_id", sh.alias("sh"))
-    )
-    kern_al = ngram_hash_rows(
-        docs, "text", "doc_id", n, tokens="alnum", distinct=True
-    )
-    assert multiset(kern_al, ["id", "gram"]) == multiset(
-        expr_al, ["doc_id", "sh"]
-    )
-
-
-def test_token_bucket_counts_matches_expression(spark):
-    """The Arrow token-bucket kernel must emit the EXACT per-doc
-    (lang, bucket, count) histogram of the explode + md5 expression
-    path it replaces (dsir_importance_weights' term derivation).
-    Adversarial text: per-char Unicode lowering (final sigma, dotted
-    I, ß), tab/CR/VT separators (Java \\s is ASCII-only), 0x20-only
-    trim, multi-byte UTF-8, repeats, empty and whitespace-only docs,
-    and NULLs."""
-    from pyspark.sql import functions as F
-
-    from pyairbyte_spark.operators.text import token_bucket_counts
-
-    rows = [
-        (1, "en", "the quick brown fox the the"),
-        (2, "de", "\tStraße  GROSS\nüber\rΑΣ ΣΟΦΙΑ\x0bİstanbul\x0c "),
-        (3, "en", " 東京 café naïve 123 MiXeD "),
-        (4, "fr", ""),
-        (5, "en", " \t \n "),
-        (6, None, None),
-        (7, "en", "repeat repeat repeat repeat"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-
-    terms = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
-            "w"
-        ),
-    ).filter(F.col("w") != "")
-    b = F.pmod(
-        F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast(
-            "bigint"
-        ),
-        F.lit(512),
-    )
-    expr = (
-        terms.select("doc_id", "lang", b.alias("b"))
-        .groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    kern = token_bucket_counts(
-        docs, "text", "doc_id", carry=["lang"], n_buckets=512
-    )
-
-    def multiset(df):
-        return sorted(
-            ((r["doc_id"], r["lang"], r["b"], r["cnt"]) for r in df.collect()),
-            key=lambda t: (t[0], t[1] or "", t[2]),
-        )
-
-    assert multiset(kern) == multiset(expr)
-    # docs with no nonempty tokens (empty / ws-only / NULL) emit nothing
-    present = {t[0] for t in multiset(kern)}
-    assert present == {1, 2, 3, 7}
-
-
-def test_minhash_signature_arrow_matches_expression(spark):
-    """The Arrow minhash kernel must emit BIT-IDENTICAL signatures to
-    the explode + groupBy expression pipeline — the persisted index
-    content (sigs/bands tables) depends on it. Covers normalize-edge
-    text (tabs/CR, mixed case, UTF-8), short docs (< k tokens -> one
-    partial shingle), empty and NULL text (md5('') degenerate), and
-    both k / num_hashes variants."""
-    import pyairbyte_spark.operators.dedup as dd
-
-    rows = [
-        (1, "One two THREE four five one two three"),
-        (2, "\tone  two\nthree\rfour "),
-        (3, " naïve café über 東京 123 "),
-        (4, "short"),
-        (5, ""),
-        (6, None),
-        (7, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    for nh, k in ((12, 3), (8, 2)):
-        old = dd.ARROW_MINHASH_KERNEL
-        try:
-            dd.ARROW_MINHASH_KERNEL = False
-            expr = {
-                r["doc_id"]: r["sig"]
-                for r in dd.minhash_signature(
-                    docs, "text", "doc_id", num_hashes=nh, k=k
-                ).collect()
-            }
-            dd.ARROW_MINHASH_KERNEL = True
-            kern = {
-                r["doc_id"]: r["sig"]
-                for r in dd.minhash_signature(
-                    docs, "text", "doc_id", num_hashes=nh, k=k
-                ).collect()
-            }
-        finally:
-            dd.ARROW_MINHASH_KERNEL = old
-        assert kern == expr, f"nh={nh} k={k}"
-
-
 def test_ivf_persistent_index_matches_direct_ivf(spark, tmp_path):
     """build_ivf_index + ivf_index_topk == ivf_topk for the same build
     parameters, and the probe scan is zone-map-pruned to the probed

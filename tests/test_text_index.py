@@ -947,37 +947,3 @@ def test_changeless_window_minhash_sync_runs_zero_spark_jobs(spark, store):
         map(tuple, minhash_index_matches(store, "mh", q).collect())
     )
     assert after == before
-
-
-def test_postings_arrow_matches_expression(spark):
-    """The Arrow postings kernel must emit the EXACT (token, id, tf,
-    dl, sign) multiset of the explode + groupBy expression pipeline —
-    the persisted index content depends on it. Edge cases: per-token
-    Unicode lowering (final sigma, dotted I), tabs/CR separators,
-    empty text (one '' token, dl=1), NULL text (row dropped), both
-    signs."""
-    import pyairbyte_spark.operators.search as se
-
-    rows = [
-        (1, "One two ONE one\ttwo"),
-        (2, ""),
-        (3, None),
-        (4, " ΑΣ Σίγμα İstanbul "),
-        (5, "a-b a-b c\r\nd\x0be"),
-        (6, "   "),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {}
-    old = se.ARROW_POSTINGS_KERNEL
-    try:
-        for flag in (False, True):
-            se.ARROW_POSTINGS_KERNEL = flag
-            out[flag] = sorted(
-                tuple(r)
-                for r in se._postings(
-                    docs, "text", "doc_id", sign=-1
-                ).collect()
-            )
-    finally:
-        se.ARROW_POSTINGS_KERNEL = old
-    assert out[True] == out[False]
