@@ -2596,17 +2596,102 @@ class CommitLogTableStore(TableStore):
         )
 
     @staticmethod
-    def _entry_schema(e: dict):
-        """The entry's recorded stage-time StructType, or None."""
-        sj = e.get("schema")
+    def _entry_schema(e: dict | None):
+        """The entry's (or scan group's) recorded stage-time
+        StructType, or None."""
+        sj = (e or {}).get("schema")
         if not sj:
             return None
-        try:
-            from pyspark.sql.types import StructType
+        from pyspark.sql.types import StructType
 
+        try:
             return StructType.fromJson(json.loads(sj))
-        except Exception:
-            return None  # unparseable record: fall back to inference
+        except (ValueError, TypeError, KeyError, AttributeError):
+            # Unparseable record (bad JSON, or JSON that is not a
+            # StructType): fall back to footer inference.
+            return None
+
+    def _read_entry(
+        self,
+        base: str,
+        e: dict | None,
+        paths: list[str] | None,
+        man: dict | None,
+        *,
+        live: list[int] | None = None,
+        dv_cols: bool = False,
+    ) -> DataFrame:
+        """Scan ONE manifest entry: the given ``paths`` (absolute files
+        inside the entry's data dir ``base``), or the whole dir when
+        ``paths`` is None — then only its ``live`` buckets. ``e`` is the
+        entry, or a scan group carrying the entry's ``schema``.
+
+        One stage = one schema: every file in an entry was written by
+        the same job, and the entry RECORDS that schema — handing it to
+        the reader skips the footer-sampling schema merge entirely (one
+        fewer Spark job per read; point lookups and sync ticks are
+        job-count-bound). Schema-less legacy entries keep the merge.
+        Metadata-added columns are filled in; ``dv_cols`` tags every
+        row with its (file, pos) identity for deletion vectors."""
+        st = self._entry_schema(e)
+        reader = (
+            self.spark.read.option("mergeSchema", "true")
+            if st is None
+            else self.spark.read.schema(st)
+        )
+        if paths is None:
+            part = reader.parquet(base)
+            if live is not None and BUCKET_COL in part.columns:
+                # Partition-pruned: only this dir's LIVE buckets are
+                # read; superseded data never reaches the scan.
+                part = part.filter(F.col(BUCKET_COL).isin(live))
+        else:
+            # basePath keeps the bucket partition column visible when
+            # addressing files inside partition dirs.
+            part = reader.option("basePath", base).parquet(*paths)
+        part = self._fill_added(part, man)
+        return self._with_dv_cols(part) if dv_cols else part
+
+    def _read_buckets(
+        self, table_name: str, man: dict, buckets: set, dvs: list[dict]
+    ) -> tuple[DataFrame | None, list[str]]:
+        """The live rows of the given merge ``buckets`` (None when no
+        entry holds one), plus the ``entry/file`` keys of the files read
+        — their DV positions retire once the buckets are restaged.
+        File-targeted: only those buckets' files are addressed — no
+        directory listing, no footer reads for untouched buckets.
+        MoR-deleted rows are dropped: in a latest-wins dedup a deleted
+        row would shadow an older-keyed but LIVE incoming row."""
+        parts: list[DataFrame] = []
+        rewritten: list[str] = []
+        for e in man["entries"]:
+            overlap = sorted(set(e.get("buckets") or []) & buckets)
+            if not overlap:
+                continue
+            p = os.path.join(self._entry_base(table_name, e), e["path"])
+            paths = None
+            if e.get("files") is not None:
+                rels = [
+                    f["path"] for f in e["files"] if f.get("bucket") in overlap
+                ]
+                if dvs:
+                    rewritten.extend(f'{e["path"]}/{r}' for r in rels)
+                if not rels:
+                    continue
+                paths = [os.path.join(p, r) for r in rels]
+            parts.append(
+                self._read_entry(
+                    p, e, paths, man, live=overlap, dv_cols=bool(dvs)
+                )
+            )
+        if not parts:
+            return None, rewritten
+        old = parts[0]
+        for part in parts[1:]:
+            old = old.unionByName(part, allowMissingColumns=True)
+        if dvs:
+            old = self._anti_join_dvs(old, table_name, dvs)
+        return old, rewritten
 
     def _entries_df(
         self,
@@ -2626,6 +2711,7 @@ class CommitLogTableStore(TableStore):
             p = os.path.join(self._entry_base(table_name, e), e["path"])
             live = e.get("buckets")
             files = e.get("files")
+            paths = None
             if files is not None:
                 # The manifest's file list is AUTHORITATIVE: deletes
                 # shrink it below the directory's contents, so reading
@@ -2643,28 +2729,11 @@ class CommitLogTableStore(TableStore):
                 ]
                 if not paths:
                     continue
-                reader = self.spark.read.option("basePath", p)
-                # One stage = one schema: every file in an entry was
-                # written by the same job, and the entry RECORDS that
-                # schema — handing it to the reader skips the
-                # footer-sampling schema merge entirely (one fewer
-                # Spark job per consulted entry; the sync tick's floor
-                # is job-count-bound). Schema-less legacy entries keep
-                # the merge.
-                st = self._entry_schema(e)
-                if st is not None:
-                    reader = reader.schema(st)
-                else:
-                    reader = reader.option("mergeSchema", "true")
-                part = reader.parquet(*paths)
-            else:
-                part = self.spark.read.option("mergeSchema", "true").parquet(p)
-                if live is not None and BUCKET_COL in part.columns:
-                    # Partition-pruned: only this dir's LIVE buckets
-                    # are read; superseded data never reaches the scan.
-                    part = part.filter(F.col(BUCKET_COL).isin(live))
-            part = self._fill_added(part, dv_man)
-            parts.append(self._with_dv_cols(part) if dvs else part)
+            parts.append(
+                self._read_entry(
+                    p, e, paths, dv_man, live=live, dv_cols=bool(dvs)
+                )
+            )
         if not parts:
             # Every file pruned (a DELETE matched the whole table):
             # the table still EXISTS — read it as an empty frame with
@@ -3662,6 +3731,16 @@ class CommitLogTableStore(TableStore):
             int(agg["u"] or 0) if (preds and bloom_cols) else None
         )
         groups: list[dict] = []
+        # Entry header rows carry the entry-level keys in ``extra``:
+        # SHALLOW-CLONE entries reference another table's dir, and the
+        # recorded schema lets each group skip footer inference.
+        hdr = entries_df.filter(F.col("file_path").isNull()).withColumns(
+            {
+                "__base": F.get_json_object(F.col("extra"), "$.base"),
+                "__schema": F.get_json_object(F.col("extra"), "$.schema"),
+            }
+        )
+        hdr_base = hdr.select("entry_path", "__base")
         if selected >= self.DISTRIBUTED_SURVIVOR_COLLAPSE_MIN:
             # Unselective regime: the surviving PATH LIST itself would
             # be the driver bottleneck. Summarize survival per ENTRY
@@ -3678,9 +3757,7 @@ class CommitLogTableStore(TableStore):
             # on disk until vacuum); such entries carry ``pruned`` and
             # MUST keep explicit file lists — a whole-dir read would
             # resurrect deleted rows and duplicate rewritten ones.
-            hdr_meta = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
+            hdr_meta = hdr.select(
                 "entry_path",
                 F.coalesce(
                     F.get_json_object(F.col("extra"), "$.pruned").cast(
@@ -3688,8 +3765,8 @@ class CommitLogTableStore(TableStore):
                     ),
                     F.lit(False),
                 ).alias("__pruned"),
-                # SHALLOW-CLONE entries reference another table's dir
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
+                "__base",
+                "__schema",
             )
             summary = (
                 flagged.groupBy("entry_path")
@@ -3723,14 +3800,9 @@ class CommitLogTableStore(TableStore):
                                 if r["entry_buckets"] is not None
                                 else None
                             ),
+                            "schema": r["__schema"],
                         }
                     )
-            hdr_base = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
             surv = (
                 flagged.filter(
                     F.col("__match") & F.col("entry_path").isin(partial)
@@ -3746,12 +3818,6 @@ class CommitLogTableStore(TableStore):
             # plan stays byte-identical to the driver path. The base
             # rides each collected row (clone entries resolve to their
             # source dir) — still O(survivors) driver rows.
-            hdr_base = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
             surv = (
                 flagged.filter(F.col("__match"))
                 .join(hdr_base, "entry_path", "left")
@@ -3764,24 +3830,34 @@ class CommitLogTableStore(TableStore):
             by_entry.setdefault((b, r["entry_path"]), []).append(
                 os.path.join(b, r["entry_path"], r["file_path"])
             )
+        # One header collect: the pre-stats entries, plus each surviving
+        # entry's recorded schema — once per ENTRY, not per surviving
+        # file row.
+        hdrs = (
+            hdr.filter(
+                ~F.col("has_files")
+                | F.col("entry_path").isin(sorted({ep for _, ep in by_entry}))
+            )
+            .select(
+                "entry_path", "entry_buckets", "has_files", "__base", "__schema"
+            )
+            .collect()
+        )
+        schema_of = {r["entry_path"]: r["__schema"] for r in hdrs}
         groups.extend(
-            {"base": os.path.join(b, ep), "paths": ps, "live": None}
+            {
+                "base": os.path.join(b, ep),
+                "paths": ps,
+                "live": None,
+                "schema": schema_of.get(ep),
+            }
             for (b, ep), ps in by_entry.items()
         )
         # Pre-stats entries (no file list): whole-dir groups with
         # row-level bucket filtering, exactly as the driver path.
-        hdr = (
-            entries_df.filter(
-                F.col("file_path").isNull() & ~F.col("has_files")
-            )
-            .select(
-                "entry_path",
-                "entry_buckets",
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
-            .collect()
-        )
-        for r in hdr:
+        for r in hdrs:
+            if r["has_files"]:
+                continue
             groups.append(
                 {
                     "base": os.path.join(
@@ -3793,6 +3869,7 @@ class CommitLogTableStore(TableStore):
                         if r["entry_buckets"] is not None
                         else None
                     ),
+                    "schema": r["__schema"],
                 }
             )
         plan = {
@@ -3873,7 +3950,14 @@ class CommitLogTableStore(TableStore):
             if files is None:
                 # Pre-stats manifest: read the whole dir, row-filter
                 # dead buckets (correct, just unskippable).
-                groups.append({"base": base, "paths": None, "live": live})
+                groups.append(
+                    {
+                        "base": base,
+                        "paths": None,
+                        "live": live,
+                        "schema": e.get("schema"),
+                    }
+                )
                 continue
             keep: list[str] = []
             keep_keys: list[tuple[str, str]] = []
@@ -3908,7 +3992,12 @@ class CommitLogTableStore(TableStore):
                 keep.append(os.path.join(base, f["path"]))
                 selected += 1
             if keep:
-                g: dict = {"base": base, "paths": keep, "live": live}
+                g: dict = {
+                    "base": base,
+                    "paths": keep,
+                    "live": live,
+                    "schema": e.get("schema"),
+                }
                 if oversize:
                     g["__keys"] = keep_keys
                 groups.append(g)
@@ -3962,27 +4051,28 @@ class CommitLogTableStore(TableStore):
         no value). Anything richer belongs in a normal ``.filter`` on
         top — Spark's parquet reader still does row-group zone-map
         skipping inside the selected files.
+
+        Building the frame launches no Spark job on the driver venue:
+        each selected entry is read with the schema its manifest entry
+        recorded (:meth:`_read_entry`), so the only job is the caller's
+        action. Schema-less legacy entries, and a distributed plan that
+        skipped everything, still infer the schema from footers.
         """
         from pyairbyte_spark.filestats import dnf_to_column
 
         plan = self.plan_scan(table_name, predicates, version=version)
         dvs = plan["manifest"].get("delete_vectors") or []
-        parts: list[DataFrame] = []
-        for g in plan["groups"]:
-            if g["paths"] is None:
-                part = self.spark.read.option("mergeSchema", "true").parquet(g["base"])
-                if g["live"] is not None and BUCKET_COL in part.columns:
-                    part = part.filter(F.col(BUCKET_COL).isin(g["live"]))
-            else:
-                part = (
-                    self.spark.read.option("mergeSchema", "true")
-                    # basePath keeps the bucket partition column visible
-                    # when addressing files inside partition dirs.
-                    .option("basePath", g["base"])
-                    .parquet(*g["paths"])
-                )
-            part = self._fill_added(part, plan["manifest"])
-            parts.append(self._with_dv_cols(part) if dvs else part)
+        parts = [
+            self._read_entry(
+                g["base"],
+                g,
+                g["paths"],
+                plan["manifest"],
+                live=g["live"],
+                dv_cols=bool(dvs),
+            )
+            for g in plan["groups"]
+        ]
         if parts:
             df = parts[0]
             for part in parts[1:]:
@@ -6138,23 +6228,23 @@ class CommitLogTableStore(TableStore):
             for t_path in touched:
                 d, _, rel = t_path.partition("/")
                 by_dir.setdefault(d, []).append(rel)
-            old_parts = []
             need_ids = mor_delete or mor_update or bool(prev_dvs)
-            dir_base = {
-                e["path"]: self._entry_base(table_name, e)
-                for e in prev_entries
-            }
+            dir_entry = {e["path"]: e for e in prev_entries}
+            old_parts = []
             for d, rels in by_dir.items():
+                e = dir_entry.get(d)
                 base = os.path.join(
-                    dir_base.get(d, self.table_path(table_name)), d
+                    self._entry_base(table_name, e or {}), d
                 )
-                p = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", base)
-                    .parquet(*[os.path.join(base, r) for r in rels])
+                old_parts.append(
+                    self._read_entry(
+                        base,
+                        e,
+                        [os.path.join(base, r) for r in rels],
+                        man,
+                        dv_cols=need_ids,
+                    )
                 )
-                p = self._fill_added(p, man)
-                old_parts.append(self._with_dv_cols(p) if need_ids else p)
             old_rows = old_parts[0]
             for p in old_parts[1:]:
                 old_rows = old_rows.unionByName(p, allowMissingColumns=True)
@@ -7215,55 +7305,16 @@ class CommitLogTableStore(TableStore):
                 src.agg(F.collect_set(BUCKET_COL)).collect()[0][0]
             )
             touched_set = set(touched)
-            old_parts: list[DataFrame] = []
             for e in man["entries"]:
-                overlap = sorted(set(e.get("buckets") or []) & touched_set)
                 remaining = [
                     b for b in (e.get("buckets") or []) if b not in touched_set
                 ]
                 if remaining:
                     keep_entries.append({**e, "buckets": remaining})
-                if not overlap:
-                    continue
-                p = os.path.join(self._entry_base(table_name, e), e["path"])
-                files = e.get("files")
-                if files is not None:
-                    ov = set(overlap)
-                    paths = [
-                        os.path.join(p, f["path"])
-                        for f in files
-                        if f.get("bucket") in ov
-                    ]
-                    if dvs:
-                        rewritten.extend(
-                            f'{e["path"]}/{f["path"]}'
-                            for f in files
-                            if f.get("bucket") in ov
-                        )
-                    if not paths:
-                        continue
-                    part = (
-                        self.spark.read.option("mergeSchema", "true")
-                        .option("basePath", p)
-                        .parquet(*paths)
-                    )
-                else:
-                    part = (
-                        self.spark.read.option("mergeSchema", "true")
-                        .parquet(p)
-                        .filter(F.col(BUCKET_COL).isin(overlap))
-                    )
-                part = self._fill_added(part, man)
-                old_parts.append(
-                    self._with_dv_cols(part) if dvs else part
-                )
-            old = None
-            if old_parts:
-                old = old_parts[0]
-                for p_df in old_parts[1:]:
-                    old = old.unionByName(p_df, allowMissingColumns=True)
-                if dvs:
-                    old = self._anti_join_dvs(old, table_name, dvs)
+            old, rewritten = self._read_buckets(
+                table_name, man, touched_set, dvs
+            )
+            if old is not None:
                 old = self._apply_mapping(old, man)
         else:
             old = self._apply_mapping(
@@ -7488,53 +7539,10 @@ class CommitLogTableStore(TableStore):
             touched_set = set(touched)
             dvs = man.get("delete_vectors") or []
             union = incoming
-            old_parts: list[DataFrame] = []
-            rewritten: list[str] = []  # file keys whose DV positions retire
-            for e in man["entries"]:
-                overlap = sorted(set(e.get("buckets") or []) & touched_set)
-                if not overlap:
-                    continue
-                p = os.path.join(self._entry_base(table_name, e), e["path"])
-                files = e.get("files")
-                if files is not None and dvs:
-                    rewritten.extend(
-                        f'{e["path"]}/{f["path"]}'
-                        for f in files
-                        if f.get("bucket") in set(overlap)
-                    )
-                if files is not None:
-                    # File-targeted read: address exactly the touched
-                    # buckets' files from the manifest — no directory
-                    # listing, no footer reads for untouched buckets.
-                    paths = [
-                        os.path.join(p, f["path"])
-                        for f in files
-                        if f.get("bucket") in set(overlap)
-                    ]
-                    if not paths:
-                        continue
-                    old = (
-                        self.spark.read.option("mergeSchema", "true")
-                        .option("basePath", p)
-                        .parquet(*paths)
-                    )
-                else:
-                    old = (
-                        self.spark.read.option("mergeSchema", "true")
-                        .parquet(p)
-                        .filter(F.col(BUCKET_COL).isin(overlap))
-                    )
-                old = self._fill_added(old, man)
-                old_parts.append(self._with_dv_cols(old) if dvs else old)
-            if old_parts:
-                olds = old_parts[0]
-                for p_df in old_parts[1:]:
-                    olds = olds.unionByName(p_df, allowMissingColumns=True)
-                if dvs:
-                    # MoR-deleted rows must not compete in latest-wins
-                    # dedup (a deleted row would shadow an older-keyed
-                    # but LIVE incoming row — resurrection by proxy).
-                    olds = self._anti_join_dvs(olds, table_name, dvs)
+            olds, rewritten = self._read_buckets(
+                table_name, man, touched_set, dvs
+            )
+            if olds is not None:
                 union = union.unionByName(olds, allowMissingColumns=True)
             latest = self._dedup_latest(union, primary_keys)
             entry = self._stage(latest, table_name)
@@ -7822,15 +7830,15 @@ class CommitLogTableStore(TableStore):
                     kept_files.append(f)
             if touched_files:
                 base = os.path.join(self._entry_base(table_name, e), e["path"])
-                part = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", base)
-                    .parquet(
-                        *[os.path.join(base, f["path"]) for f in touched_files]
+                parts.append(
+                    self._read_entry(
+                        base,
+                        e,
+                        [os.path.join(base, f["path"]) for f in touched_files],
+                        man,
+                        dv_cols=need_dv_cols,
                     )
                 )
-                part = self._fill_added(part, man)
-                parts.append(self._with_dv_cols(part) if need_dv_cols else part)
                 touched_paths.extend(
                     f'{e["path"]}/{f["path"]}' for f in touched_files
                 )
@@ -8030,16 +8038,14 @@ class CommitLogTableStore(TableStore):
                     kept_files.append(f)
             if touched_files:
                 base = os.path.join(self._entry_base(table_name, e), e["path"])
-                part = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", base)
-                    .parquet(
-                        *[os.path.join(base, f["path"]) for f in touched_files]
-                    )
-                )
-                part = self._fill_added(part, man)
                 parts.append(
-                    self._with_dv_cols(part) if need_dv_cols else part
+                    self._read_entry(
+                        base,
+                        e,
+                        [os.path.join(base, f["path"]) for f in touched_files],
+                        man,
+                        dv_cols=need_dv_cols,
+                    )
                 )
                 touched_paths.extend(
                     f'{e["path"]}/{f["path"]}' for f in touched_files
@@ -9635,14 +9641,14 @@ class CommitLogTableStore(TableStore):
                         kept_files_n += 1
             if small:
                 base = os.path.join(self._entry_base(table_name, e), e["path"])
-                part = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", base)
-                    .parquet(*[os.path.join(base, f["path"]) for f in small])
-                )
-                part = self._fill_added(part, man)
                 parts.append(
-                    self._with_dv_cols(part) if prior_dvs else part
+                    self._read_entry(
+                        base,
+                        e,
+                        [os.path.join(base, f["path"]) for f in small],
+                        man,
+                        dv_cols=bool(prior_dvs),
+                    )
                 )
                 small_paths.extend(
                     f'{e["path"]}/{f["path"]}' for f in small

@@ -404,8 +404,8 @@ def test_kmeans_centroids_deterministic(spark):
 def test_kmeans_driver_path_matches_distributed(spark):
     """The driver-side Lloyd fast path must be bit-identical to the
     distributed formulation (both round every decision value to 6
-    decimals — see scripts/probe_kmeans_driver.py for the full
-    config × scale matrix)."""
+    decimals — see OPTIMIZATION_r15.md for the full config × scale
+    matrix)."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
     def run():
