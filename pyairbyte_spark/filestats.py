@@ -266,9 +266,10 @@ def file_must_match_dnf(
     """The dual of :func:`file_may_match_dnf`: True only when stats
     PROVE every row of the file satisfies the DNF — it is sufficient
     (and conservative) that one disjunct's conjunction provably holds
-    for all rows. Powers metadata-only counting
-    (``CommitLogTableStore.count_where``): a fully-covered file
-    contributes its exact footer row count without being read."""
+    for all rows. Powers the metadata tier of aggregate pushdown
+    (``CommitLogTableStore.agg_where``, whose ``count(*)`` is
+    ``count_where``): a fully-covered file contributes its footer
+    stats (row count, zone map, harvested sum) without being read."""
     if not dnf:
         return True
     return any(file_must_match(file_entry, branch) for branch in dnf)

@@ -1040,6 +1040,49 @@ def _agg_alias(fn: str, col: str) -> str:
     return f"{fn}_star" if col == "*" else f"{fn}_{col}"
 
 
+def _file_live(live: "list | None", f: dict) -> bool:
+    """Bucket liveness of one manifest file: live unless its entry
+    lists ``live`` buckets and the file's bucket is not among them
+    (superseded bucket data in a carried merge dir)."""
+    return live is None or f.get("bucket") is None or f["bucket"] in live
+
+
+def _live_file_col():
+    """:func:`_file_live` over a checkpoint-sidecar frame: its file
+    rows (header rows carry no ``file_path``) whose bucket is live."""
+    return F.col("file_path").isNotNull() & (
+        F.col("entry_buckets").isNull()
+        | F.col("bucket").isNull()
+        | F.expr("array_contains(entry_buckets, bucket)")
+    )
+
+
+def _entry_base_col():
+    """A sidecar header row's ``base``: the source table's root that a
+    SHALLOW-CLONE entry's dir lives under (null for own dirs)."""
+    return F.get_json_object(F.col("extra"), "$.base")
+
+
+# Schema JSON spells primitives differently from simpleString() (the
+# _EXACT_STAT_TYPES / _SUM_STAT_TYPES domain).
+_JSON_TYPES = {
+    "long": "bigint",
+    "integer": "int",
+    "short": "smallint",
+    "byte": "tinyint",
+}
+
+
+def _recorded_types(schema_json: str) -> "dict[str, str]":
+    """Physical column -> simpleString() type of every primitive field
+    of a recorded schema JSON."""
+    return {
+        fld["name"]: _JSON_TYPES.get(fld["type"], fld["type"])
+        for fld in json.loads(schema_json)["fields"]
+        if isinstance(fld.get("type"), str)
+    }
+
+
 def _agg_meta_answer(
     f: dict,
     specs: "list[tuple[str, str]]",
@@ -1101,6 +1144,102 @@ def _agg_meta_answer(
             return None
         out[a] = v
     return out
+
+
+def _agg_file_tier(
+    f: dict,
+    preds: "list[list[tuple]]",
+    specs: "list[tuple[str, str]]",
+    phys_of: "dict[str, str]",
+    exact_minmax: "set[str]",
+    meta: bool = True,
+) -> "str | dict":
+    """One live file's aggregate-pushdown tier: ``"P"`` when its zone
+    maps prove no row matches the physical DNF ``preds`` (pruned),
+    the :func:`_agg_meta_answer` contribution when every row provably
+    matches and every aggregate is stats-answerable, else ``"S"``
+    (scanned). ``meta=False`` turns the metadata tier off (merge-on-read
+    deletes poison footer stats). Module-level so the driver loop and
+    the distributed classifier's pandas UDF run the same code."""
+    from pyairbyte_spark.filestats import file_may_match_dnf, file_must_match_dnf
+
+    if not file_may_match_dnf(f, preds):
+        return "P"
+    if not meta or not file_must_match_dnf(f, preds):
+        return "S"
+    contrib = _agg_meta_answer(f, specs, phys_of, exact_minmax)
+    return "S" if contrib is None else contrib
+
+
+def _agg_scan_exprs(
+    specs: "list[tuple[str, str]]", col_of: "dict[str, str] | None" = None
+) -> list:
+    """Spark aggregate expressions computing every spec from data,
+    aliased ``{fn}_{col}``; ``col_of`` maps logical to physical names
+    for frames read before column mapping."""
+    col_of = col_of or {}
+    out = []
+    for fn, col in specs:
+        if fn == "count":
+            e = F.count(F.lit(1) if col == "*" else F.col(col_of.get(col, col)))
+            e = e.cast("long")
+        else:
+            e = getattr(F, fn)(F.col(col_of.get(col, col)))
+        out.append(e.alias(_agg_alias(fn, col)))
+    return out
+
+
+def _agg_merge(specs: "list[tuple[str, str]]", a: dict, b: dict) -> dict:
+    """Combine two partial aggregate dicts keyed by alias (a metadata
+    contribution, a metadata-tier fold, a scan result): counts add,
+    sums add, min/max fold; a missing or None side contributes nothing,
+    so an empty match set keeps SQL semantics (count 0, others None)."""
+    out: dict = {}
+    for fn, col in specs:
+        k = _agg_alias(fn, col)
+        if fn == "count":
+            out[k] = int(a.get(k) or 0) + int(b.get(k) or 0)
+            continue
+        vals = [v for v in (a.get(k), b.get(k)) if v is not None]
+        if not vals:
+            out[k] = None
+        elif fn == "sum":
+            out[k] = sum(vals)
+        else:
+            out[k] = min(vals) if fn == "min" else max(vals)
+    return out
+
+
+def _zone_merge(
+    acc: dict, dead: set, col: str, st: dict, files: int = 1
+) -> None:
+    """Fold one column's zone map ``st`` (covering ``files`` live
+    files) into ``acc``. ``acc[col]["files"]`` counts the live files
+    CARRYING the column's stats: min/max are proofs over the whole
+    table only when it equals the table's file count (a stat-less
+    legacy file could hold anything). Columns whose mins do not compare
+    (mixed types across schema evolution) move to ``dead`` for good."""
+    if col in dead:
+        return
+    cur = acc.get(col)
+    if cur is None:
+        acc[col] = {**st, "files": files}
+        return
+    cur["files"] += files
+    try:
+        cur["min"] = min(cur["min"], st["min"])
+    except TypeError:
+        dead.add(col)
+        del acc[col]
+        return
+    if cur.get("max") is None or st.get("max") is None:
+        cur["max"] = None
+    else:
+        cur["max"] = max(cur["max"], st["max"])
+    if cur.get("nulls") is None or st.get("nulls") is None:
+        cur["nulls"] = None
+    else:
+        cur["nulls"] += st["nulls"]
 
 
 class CommitLogTableStore(TableStore):
@@ -2719,13 +2858,7 @@ class CommitLogTableStore(TableStore):
                 # files also skips the FS listing and applies bucket
                 # liveness per file instead of row-filtering.
                 paths = [
-                    os.path.join(p, f["path"])
-                    for f in files
-                    if (
-                        live is None
-                        or f.get("bucket") is None
-                        or f["bucket"] in live
-                    )
+                    os.path.join(p, f["path"]) for f in files if _file_live(live, f)
                 ]
                 if not paths:
                     continue
@@ -2818,11 +2951,7 @@ class CommitLogTableStore(TableStore):
                     self._entry_base(table_name, e), e["path"]
                 )
                 for f in files:
-                    if (
-                        live is not None
-                        and f.get("bucket") is not None
-                        and f["bucket"] not in live
-                    ):
+                    if not _file_live(live, f):
                         continue
                     if f.get("bytes") is None:
                         return None
@@ -3638,11 +3767,7 @@ class CommitLogTableStore(TableStore):
 
         root = self.table_path(table_name)
         file_rows = entries_df.filter(F.col("file_path").isNotNull())
-        live = file_rows.filter(
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
+        live = entries_df.filter(_live_file_col())
         bloom_meta = top.get("bloom_index")
         bloom_cols = (
             self._bloom_pred_cols(bloom_meta, preds) if bloom_meta else set()
@@ -3736,7 +3861,7 @@ class CommitLogTableStore(TableStore):
         # recorded schema lets each group skip footer inference.
         hdr = entries_df.filter(F.col("file_path").isNull()).withColumns(
             {
-                "__base": F.get_json_object(F.col("extra"), "$.base"),
+                "__base": _entry_base_col(),
                 "__schema": F.get_json_object(F.col("extra"), "$.schema"),
             }
         )
@@ -3962,11 +4087,7 @@ class CommitLogTableStore(TableStore):
             keep: list[str] = []
             keep_keys: list[tuple[str, str]] = []
             for f in files:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
+                if not _file_live(live, f):
                     continue  # superseded bucket data — never live
                 total += 1
                 if (
@@ -4106,37 +4227,18 @@ class CommitLogTableStore(TableStore):
         *,
         version: int | None = None,
     ) -> dict:
-        """EXACT filtered ``COUNT(*)`` with metadata short-circuits —
-        the aggregate-pushdown counterpart of :meth:`read_where`.
-        Files are classified by zone maps into three tiers:
-
-        - provably NO row matches (``file_may_match_dnf`` false) —
-          skipped, contributes 0;
-        - provably EVERY row matches (``file_must_match_dnf``: null
-          count 0 and [min,max] inside the predicate range) —
-          contributes its exact footer row count, NEVER read;
-        - boundary — scanned with the residual filter.
-
-        On a time/bucket-clustered 100 TB table a range count reads
-        only the two boundary files of the range (Delta answers
-        unfiltered counts this way from its log; this extends the
-        trick to predicates). Unfiltered count: pure manifest
-        arithmetic, zero files read. Returns ``{"count", "files_total",
-        "files_metadata", "files_scanned"}`` — total minus the other
-        two is the zone-map-pruned tier. Merge-on-read deletes poison
-        footer counts, so DV-bearing snapshots scan every surviving
-        file (still may-match pruned; exact either way)."""
-        from pyairbyte_spark.filestats import (
-            dnf_to_column,
-            file_may_match_dnf,
-            file_must_match_dnf,
-            normalize_dnf,
-        )
+        """EXACT filtered ``COUNT(*)`` — the aggregate-pushdown
+        counterpart of :meth:`read_where`, answered as
+        :meth:`agg_where`'s ``count(*)`` (same zone-map tiers, same
+        venues). An unfiltered count is pure manifest arithmetic
+        (:meth:`table_stats`; DV row counts correct merge-on-read
+        deletes exactly), zero files read. Returns ``{"count",
+        "files_total", "files_metadata", "files_scanned"}`` — total
+        minus the other two is the zone-map-pruned tier."""
+        from pyairbyte_spark.filestats import normalize_dnf
 
         preds = normalize_dnf(predicates)
         if not preds:
-            # Unfiltered: table_stats already answers from the manifest
-            # (DV row counts correct MoR deletes exactly) — zero files.
             ts = self.table_stats(table_name, version=version)
             if ts.get("rows") is not None:
                 return {
@@ -4145,184 +4247,10 @@ class CommitLogTableStore(TableStore):
                     "files_metadata": ts.get("files"),
                     "files_scanned": 0,
                 }
-        top, entries_df, man = self._scan_source(table_name, version)
-        preds_phys = self._physical_dnf(top, preds)
-        has_dvs = bool((top or {}).get("delete_vectors"))
-        if entries_df is not None:
-            return self._count_where_distributed(
-                table_name, top, entries_df, preds, preds_phys, has_dvs
-            )
-        meta_rows = 0
-        meta_files = 0
-        total = 0
-        scan_entries: list[dict] = []
-        exact_total = True
-        for e in man.get("entries") or []:
-            live = e.get("buckets")
-            files = e.get("files")
-            if files is None:
-                # Pre-stats entry: the dir itself is the authority.
-                scan_entries.append(e)
-                exact_total = False
-                continue
-            keep: list[dict] = []
-            for f in files:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
-                    continue
-                total += 1
-                if not file_may_match_dnf(f, preds_phys):
-                    continue
-                if not has_dvs and file_must_match_dnf(f, preds_phys):
-                    meta_rows += f["rows"] or 0
-                    meta_files += 1
-                else:
-                    keep.append(f)
-            if keep:
-                scan_entries.append({**e, "files": keep})
-        n_scan = sum(
-            len(e["files"]) if e.get("files") is not None else 0
-            for e in scan_entries
-        )
-        scanned_rows = 0
-        if scan_entries:
-            df = self._apply_mapping(
-                self._entries_df(table_name, scan_entries, dv_man=man), man
-            )
-            residual = dnf_to_column(preds)  # logical names post-mapping
-            if residual is not None:
-                df = df.filter(residual)
-            scanned_rows = df.count()
-        return {
-            "count": meta_rows + scanned_rows,
-            "files_total": total if exact_total else None,
-            "files_metadata": meta_files,
-            "files_scanned": n_scan if exact_total else None,
-        }
+        r = self._agg_fold(table_name, [("count", "*")], preds, version)
+        return {"count": r.pop("aggs")["count_star"], **r}
 
-    def _count_where_distributed(
-        self,
-        table_name: str,
-        top: dict,
-        entries_df: DataFrame,
-        preds: list[list[tuple]],
-        preds_phys: list[list[tuple]],
-        has_dvs: bool,
-    ) -> dict:
-        """:meth:`count_where` over the checkpoint sidecar: the
-        three-tier classification runs as one Spark aggregation (the
-        same pandas-UDF venue as :meth:`_plan_scan_distributed`), the
-        metadata tier sums ``rows`` relationally, and only BOUNDARY
-        file paths cross to the driver — at most
-        ``COUNT_SCAN_FALLBACK_MAX`` of them, past which the count
-        degrades to one ordinary pruned scan (:meth:`read_where`)."""
-        import pandas as pd
-
-        from pyairbyte_spark.filestats import (
-            file_may_match_dnf,
-            file_must_match_dnf,
-        )
-
-        # MoR DVs poison footer counts, and pre-stats dir entries have
-        # no file rows to classify: both degrade to one pruned scan.
-        if has_dvs or not entries_df.filter(
-            F.col("file_path").isNull() & ~F.col("has_files")
-        ).isEmpty():
-            df = self.read_where(table_name, preds)
-            return {
-                "count": df.count(),
-                "files_total": None,
-                "files_metadata": 0,
-                "files_scanned": None,
-            }
-
-        preds_b = preds_phys
-
-        @F.pandas_udf("string")
-        def _tier(stats: pd.Series, rows: pd.Series, sv: pd.Series) -> pd.Series:
-            out = []
-            for s, r, v in zip(stats, rows, sv):
-                fe = {
-                    "stats": None if s is None else json.loads(s),
-                    "rows": None if pd.isna(r) else int(r),
-                    "sv": None if pd.isna(v) else int(v),
-                }
-                if not file_may_match_dnf(fe, preds_b):
-                    out.append("prune")
-                elif file_must_match_dnf(fe, preds_b):
-                    out.append("meta")
-                else:
-                    out.append("scan")
-            return pd.Series(out)
-
-        live = entries_df.filter(F.col("file_path").isNotNull()).filter(
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
-        flagged = live.withColumn(
-            "__tier", _tier(F.col("stats"), F.col("rows"), F.col("sv"))
-        )
-        agg = flagged.agg(
-            F.count(F.lit(1)).alias("t"),
-            F.sum(
-                F.when(F.col("__tier") == "meta", F.col("rows")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("meta_rows"),
-            F.sum((F.col("__tier") == "meta").cast("long")).alias("mf"),
-            F.sum((F.col("__tier") == "scan").cast("long")).alias("sf"),
-        ).collect()[0]
-        n_scan = int(agg["sf"] or 0)
-        if n_scan > self.COUNT_SCAN_FALLBACK_MAX:
-            # Unselective predicate: the boundary path list would be
-            # the driver bottleneck — one pruned scan IS the plan.
-            df = self.read_where(table_name, preds)
-            return {
-                "count": df.count(),
-                "files_total": int(agg["t"] or 0),
-                "files_metadata": 0,
-                "files_scanned": n_scan,
-            }
-        from pyairbyte_spark.filestats import dnf_to_column
-
-        scanned_rows = 0
-        if n_scan:
-            hdr_meta = entries_df.filter(F.col("file_path").isNull()).select(
-                "entry_path",
-                # SHALLOW-CLONE entries reference another table's dir
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
-            rows = (
-                flagged.filter(F.col("__tier") == "scan")
-                .select("entry_path", "file_path")
-                .join(hdr_meta, "entry_path", "left")
-                .collect()
-            )
-            root = self.table_path(table_name)
-            paths = [
-                os.path.join(
-                    r["__base"] or root, r["entry_path"], r["file_path"]
-                )
-                for r in rows
-            ]
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            df = self._fill_added(df, top)
-            residual = dnf_to_column(preds_phys)
-            if residual is not None:
-                df = df.filter(residual)
-            scanned_rows = df.count()
-        return {
-            "count": int(agg["meta_rows"] or 0) + scanned_rows,
-            "files_total": int(agg["t"] or 0),
-            "files_metadata": int(agg["mf"] or 0),
-            "files_scanned": n_scan,
-        }
-
-    # Boundary-path cap for the distributed count: past this, collect
+    # Boundary-path cap for the distributed fold: past this, collect
     # degrades to one ordinary pruned scan (same plan read_where runs).
     COUNT_SCAN_FALLBACK_MAX = 65_536
 
@@ -4334,6 +4262,53 @@ class CommitLogTableStore(TableStore):
         "tinyint", "smallint", "int", "bigint", "float", "double",
     )
 
+    def _logical_types(self, man: dict) -> "dict[str, str] | None":
+        """Logical column -> simpleString() type from the snapshot's
+        RECORDED schema JSON (entry-level newest first, then the
+        carried top-level field, plus metadata-added columns), or None
+        when nothing is recorded — building a Spark frame just to read
+        types would re-infer schema over every data dir."""
+        sch = next(
+            (
+                e.get("schema")
+                for e in reversed(man.get("entries") or [])
+                if e.get("schema")
+            ),
+            None,
+        ) or man.get("schema")
+        if not sch:
+            return None
+        mapping, _dropped = self._mapping_of(man)
+        types = {
+            mapping.get(c, c): t for c, t in _recorded_types(sch).items()
+        }
+        for phys, spec in (man.get("added_columns") or {}).items():
+            types.setdefault(mapping.get(phys, phys), spec["type"])
+        return types
+
+    def _agg_scan_fallback(
+        self,
+        table_name: str,
+        specs: "list[tuple[str, str]]",
+        preds: list[list[tuple]],
+        version: int | None,
+        files_total: int | None = None,
+        files_scanned: int | None = None,
+    ) -> dict:
+        """Every aggregate from one ordinary pruned scan
+        (:meth:`read_where`): the distributed venue's plan when the
+        snapshot cannot be classified, or when the boundary path list
+        would be the driver bottleneck (the scan re-reads the
+        metadata-tier files too, so its aggregate alone is the
+        complete answer)."""
+        df = self.read_where(table_name, preds, version=version)
+        return {
+            "aggs": df.agg(*_agg_scan_exprs(specs)).collect()[0].asDict(),
+            "files_total": files_total,
+            "files_metadata": 0,
+            "files_scanned": files_scanned,
+        }
+
     def _agg_where_distributed(
         self,
         table_name: str,
@@ -4342,36 +4317,28 @@ class CommitLogTableStore(TableStore):
         preds: list[list[tuple]],
         preds_phys: list[list[tuple]],
         specs: "list[tuple[str, str]]",
+        version: int | None,
     ) -> "dict | None":
-        """:meth:`agg_where` over the checkpoint sidecar for MIXED
-        count/min/max lists: one pandas-UDF pass classifies every file
-        row into prune / metadata / boundary (the same three tiers as
-        the driver loop, same :func:`_agg_meta_answer` semantics), the
-        metadata tier's footer contributions FOLD RELATIONALLY (counts
-        sum, min/max fold typed from the contribution JSON), dominance
-        pruning drops boundary files whose zone maps cannot beat the
-        folded candidates, and only the surviving boundary paths cross
-        to the driver (capped at ``COUNT_SCAN_FALLBACK_MAX``, past
-        which one ordinary pruned scan IS the plan). The entry list
-        never materializes on the driver. Returns None when the
-        snapshot cannot be classified (pre-stats dir entries, no
-        recorded schema) — the caller degrades to one pruned scan."""
+        """:meth:`_agg_fold` over the checkpoint sidecar: one pandas-UDF
+        pass classifies every live file row with :func:`_agg_file_tier`,
+        the metadata tier's footer contributions FOLD RELATIONALLY
+        (counts and sums add, min/max fold typed from the contribution
+        JSON), dominance pruning drops boundary files whose zone maps
+        cannot beat the folded candidates, and only the surviving
+        boundary paths cross to the driver (capped at
+        ``COUNT_SCAN_FALLBACK_MAX``, past which one ordinary pruned scan
+        IS the plan). The entry list never materializes on the driver.
+        Returns None when the snapshot cannot be classified (pre-stats
+        dir entries; min/max without a recorded schema) — the caller
+        degrades to one pruned scan."""
         import pandas as pd
 
-        from pyairbyte_spark.filestats import (
-            dnf_to_column,
-            file_may_match_dnf,
-            file_must_match_dnf,
-        )
+        from pyairbyte_spark.filestats import dnf_to_column
 
-        # Pre-stats dir entries have no per-file rows to classify, and
-        # without the recorded schema min/max exactness is unknowable.
+        # Pre-stats dir entries have no per-file rows to classify.
         if not entries_df.filter(
             F.col("file_path").isNull() & ~F.col("has_files")
         ).isEmpty():
-            return None
-        sch = top.get("schema")
-        if not sch:
             return None
         # contributions round-trip through JSON keyed by alias; a
         # column name that isn't a plain word would break the
@@ -4383,45 +4350,24 @@ class CommitLogTableStore(TableStore):
             if col != "*"
         ):
             return None
-        mapping, _dropped = self._mapping_of(top)
-        # schema JSON spells primitives differently from simpleString()
-        # (the _EXACT_STAT_TYPES domain): long/integer/short/byte vs
-        # bigint/int/smallint/tinyint
-        _json_t = {
-            "long": "bigint",
-            "integer": "int",
-            "short": "smallint",
-            "byte": "tinyint",
-        }
-        logical_types: dict[str, str] = {}
-        for fld in json.loads(sch)["fields"]:
-            t = fld.get("type")
-            if isinstance(t, str):
-                logical_types[mapping.get(fld["name"], fld["name"])] = (
-                    _json_t.get(t, t)
-                )
         phys_of = {
             col: self._to_physical(top, col)
             for _fn, col in specs
             if col != "*"
         }
+        # Only min/max need column types (exactness and the fold's SQL
+        # type); without the recorded schema they are unknowable.
+        types: dict[str, str] = {}
+        if any(fn in ("min", "max") for fn, _c in specs):
+            types = self._logical_types(top)
+            if types is None:
+                return None
         exact_minmax = {
-            col
-            for col in phys_of
-            if logical_types.get(col) in self._EXACT_STAT_TYPES
+            col for col in phys_of if types.get(col) in self._EXACT_STAT_TYPES
         }
 
         def _sql_type(col: str) -> str:
-            return (
-                "double"
-                if logical_types.get(col) in ("float", "double")
-                else "long"
-            )
-
-        specs_b = list(specs)
-        preds_b = preds_phys
-        phys_b = dict(phys_of)
-        exact_b = set(exact_minmax)
+            return "double" if types.get(col) in ("float", "double") else "long"
 
         @F.pandas_udf("string")
         def _cls(stats: pd.Series, rows: pd.Series, sv: pd.Series) -> pd.Series:
@@ -4432,22 +4378,11 @@ class CommitLogTableStore(TableStore):
                     "rows": None if pd.isna(r) else int(r),
                     "sv": None if pd.isna(v) else int(v),
                 }
-                if not file_may_match_dnf(fe, preds_b):
-                    out.append("P")
-                    continue
-                if not file_must_match_dnf(fe, preds_b):
-                    out.append("S")
-                    continue
-                contrib = _agg_meta_answer(fe, specs_b, phys_b, exact_b)
-                out.append("S" if contrib is None else json.dumps(contrib))
+                c = _agg_file_tier(fe, preds_phys, specs, phys_of, exact_minmax)
+                out.append(c if isinstance(c, str) else json.dumps(c))
             return pd.Series(out)
 
-        live = entries_df.filter(F.col("file_path").isNotNull()).filter(
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
-        flagged = live.withColumn(
+        flagged = entries_df.filter(_live_file_col()).withColumn(
             "__c", _cls(F.col("stats"), F.col("rows"), F.col("sv"))
         )
         is_meta = ~F.col("__c").isin("P", "S")
@@ -4483,36 +4418,13 @@ class CommitLogTableStore(TableStore):
                         F.when(is_meta, j.cast(_sql_type(col)))
                     ).alias(a)
                 )
-        row = flagged.agg(*agg_exprs).collect()[0]
+        row = flagged.agg(*agg_exprs).collect()[0].asDict()
         n_scan = int(row["__sf"] or 0)
+        files_total = int(row["__t"] or 0)
         if n_scan > self.COUNT_SCAN_FALLBACK_MAX:
-            # Unselective predicate: the boundary path list would be
-            # the driver bottleneck — one pruned scan IS the plan
-            # (it re-reads the metadata-tier files too, so the
-            # scanned aggregate alone is the complete answer).
-            df = self.read_where(table_name, preds)
-            exprs = []
-            for fn, col in specs:
-                a = _agg_alias(fn, col)
-                if fn == "count":
-                    e = (
-                        F.count(F.lit(1))
-                        if col == "*"
-                        else F.count(F.col(col))
-                    )
-                    exprs.append(e.cast("long").alias(a))
-                else:
-                    exprs.append(getattr(F, fn)(F.col(col)).alias(a))
-            r = df.agg(*exprs).collect()[0]
-            return {
-                "aggs": {
-                    _agg_alias(fn, col): r[_agg_alias(fn, col)]
-                    for fn, col in specs
-                },
-                "files_total": int(row["__t"] or 0),
-                "files_metadata": 0,
-                "files_scanned": n_scan,
-            }
+            return self._agg_scan_fallback(
+                table_name, specs, preds, version, files_total, n_scan
+            )
         scan_rows = flagged.filter(F.col("__c") == "S")
         if all(fn in ("min", "max") for fn, _c in specs):
             # Dominance pruning, relationally: a boundary file whose
@@ -4540,80 +4452,37 @@ class CommitLogTableStore(TableStore):
                     dominated = dominated & c
                 scan_rows = scan_rows.filter(~dominated)
         scanned: dict = {}
-        n_scanned_files = 0
-        rows_: list = []
+        paths: list[str] = []
         # Zero boundary files (every live file answered from metadata
         # or pruned — the common zero-read case this tier exists for):
         # scan_rows is empty by construction, so skip its collect
         # outright instead of paying a scheduler round-trip to learn
-        # that (one job per metadata-answered agg_where).
+        # that (one job per metadata-answered call).
         if n_scan > 0:
-            hdr_meta = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                # SHALLOW-CLONE entries reference another table's dir
-                F.get_json_object(F.col("extra"), "$.base").alias(
-                    "__base"
-                ),
+            hdr_base = entries_df.filter(F.col("file_path").isNull()).select(
+                "entry_path", _entry_base_col().alias("__base")
             )
-            rows_ = (
-                scan_rows.select("entry_path", "file_path")
-                .join(hdr_meta, "entry_path", "left")
-                .collect()
-            )
-        if rows_:
             root = self.table_path(table_name)
             paths = [
                 os.path.join(
                     r["__base"] or root, r["entry_path"], r["file_path"]
                 )
-                for r in rows_
+                for r in scan_rows.select("entry_path", "file_path")
+                .join(hdr_base, "entry_path", "left")
+                .collect()
             ]
-            n_scanned_files = len(paths)
+        if paths:
             df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
             df = self._fill_added(df, top)
             residual = dnf_to_column(preds_phys)
             if residual is not None:
                 df = df.filter(residual)
-            exprs = []
-            for fn, col in specs:
-                a = _agg_alias(fn, col)
-                if fn == "count":
-                    e = (
-                        F.count(F.lit(1))
-                        if col == "*"
-                        else F.count(F.col(phys_of.get(col, col)))
-                    )
-                    exprs.append(e.cast("long").alias(a))
-                else:
-                    exprs.append(
-                        getattr(F, fn)(F.col(phys_of[col])).alias(a)
-                    )
-            srow = df.agg(*exprs).collect()[0]
-            scanned = {a: srow[a] for a in srow.asDict()}
-        out_aggs: dict = {}
-        for fn, col in specs:
-            a = _agg_alias(fn, col)
-            if fn == "count":
-                out_aggs[a] = int(row[a] or 0) + int(scanned.get(a) or 0)
-            else:
-                vals = [
-                    v
-                    for v in (row[a], scanned.get(a))
-                    if v is not None
-                ]
-                if not vals:
-                    out_aggs[a] = None
-                elif fn == "sum":
-                    out_aggs[a] = sum(vals)
-                else:
-                    out_aggs[a] = min(vals) if fn == "min" else max(vals)
+            scanned = df.agg(*_agg_scan_exprs(specs, phys_of)).collect()[0].asDict()
         return {
-            "aggs": out_aggs,
-            "files_total": int(row["__t"] or 0),
+            "aggs": _agg_merge(specs, row, scanned),
+            "files_total": files_total,
             "files_metadata": int(row["__mf"] or 0),
-            "files_scanned": n_scanned_files,
+            "files_scanned": len(paths),
         }
 
     def agg_where(
@@ -4625,22 +4494,30 @@ class CommitLogTableStore(TableStore):
         version: int | None = None,
     ) -> dict:
         """EXACT filtered SUM/MIN/MAX/COUNT/AVG with metadata
-        short-circuits — :meth:`count_where` generalized to a list of
-        ``(fn, col)`` aggregates (``fn`` in ``count/sum/min/max/avg``;
-        ``col`` may be ``"*"`` for ``count``). Files classify into the
-        same three zone-map tiers:
+        short-circuits, for a list of ``(fn, col)`` aggregates (``fn``
+        in ``count/sum/min/max/avg``; ``col`` may be ``"*"`` for
+        ``count``). Each live file is classified by its zone maps into
+        one of three tiers:
 
-        - provably NO row matches — skipped, contributes nothing;
-        - provably EVERY row matches AND every requested aggregate is
-          stats-answerable for the file — answered from the footer
-          stats, never read: ``count(*)`` from the row count,
-          ``count(col)`` from rows − nulls, ``min/max(col)`` from the
-          column's zone map when the column's type makes footer
-          min/max exact values (numeric; strings truncate and
-          temporals encode, so they scan);
+        - provably NO row matches (``file_may_match_dnf`` false) —
+          skipped, contributes nothing;
+        - provably EVERY row matches (``file_must_match_dnf``: null
+          count 0 and [min,max] inside the predicate range) AND every
+          requested aggregate is stats-answerable for the file —
+          answered from the footer stats, never read: ``count(*)``
+          from the row count, ``count(col)`` from rows − nulls,
+          ``min/max(col)`` from the column's zone map when the
+          column's type makes footer min/max exact values (numeric;
+          strings truncate and temporals encode, so they scan);
         - boundary (or stats-insufficient) — scanned with the residual
           filter, ALL aggregates computed from data (a file is never
           split between tiers, so nothing double-counts).
+
+        On a time/bucket-clustered 100 TB table a range count reads
+        only the two boundary files of the range, and ``min/max`` of
+        the cluster key over a range is answered from boundary files
+        only (Delta answers unfiltered counts from its log; this
+        extends the trick to predicates and to MIN/MAX/SUM).
 
         ``sum(col)`` joins the metadata tier when the store harvested
         per-file sums for the column (``harvest_sums=True`` at staging,
@@ -4657,28 +4534,23 @@ class CommitLogTableStore(TableStore):
         additionally skipped (min-dominance: a file with ``stats.min
         >= cand_min`` cannot lower the minimum — a point-lookup-style
         plan on a clustered 100 TB table reads only the competitive
-        files).
+        files). Column types are resolved only for min/max.
 
-        On a clustered table, ``min/max`` of the cluster key over a
-        range predicate is answered from boundary files only; the
-        unfiltered count stays pure manifest arithmetic. Merge-on-read
-        DVs poison footer stats, so DV-bearing snapshots scan (still
-        may-match pruned; exact either way). Checkpoint-sidecar
-        (distributed-manifest) snapshots ride the distributed
-        classifier for any count/min/max/sum list — the entry list
-        never materializes on the driver
-        (:meth:`_agg_where_distributed`).
+        Merge-on-read DVs poison footer stats: on a DV-bearing
+        snapshot the metadata tier is off, files still zone-map prune
+        and the scan applies the DVs (exact either way).
+        Checkpoint-sidecar (distributed-manifest) snapshots run the
+        same classifier as one Spark job (:meth:`_agg_where_distributed`)
+        — the entry list never materializes on the driver; DV-bearing
+        or unclassifiable ones degrade to one pruned scan.
         Returns ``{"aggs": {alias: value}, "files_total",
         "files_metadata", "files_scanned"}`` with aliases
         ``{fn}_{col}`` (``count_star`` for ``count(*)``); empty match
         sets yield SQL semantics (count 0, sum/min/max None).
+        ``files_total``/``files_scanned`` are None when a pre-stats
+        entry or the scan fallback leaves them unknown.
         """
-        from pyairbyte_spark.filestats import (
-            dnf_to_column,
-            file_may_match_dnf,
-            file_must_match_dnf,
-            normalize_dnf,
-        )
+        from pyairbyte_spark.filestats import normalize_dnf
 
         specs: list[tuple[str, str]] = []
         for fn, col in aggs:
@@ -4693,290 +4565,143 @@ class CommitLogTableStore(TableStore):
             specs.append((fn, col))
         if not specs:
             raise ValueError("agg_where requires at least one aggregate")
-        if any(fn == "avg" for fn, _c in specs):
-            # AVG = SUM / COUNT(col), decomposed so both the driver
-            # loop and the distributed classifier only ever fold
-            # mergeable aggregates (a per-file average is not
-            # mergeable; a per-file sum+count pair is). The division
-            # happens once, here, on the exact integer totals.
-            internal: list[tuple[str, str]] = []
-            for fn, col in specs:
-                for p in (
-                    [("sum", col), ("count", col)]
-                    if fn == "avg"
-                    else [(fn, col)]
-                ):
-                    if p not in internal:
-                        internal.append(p)
-            r = self.agg_where(
-                table_name, internal, predicates, version=version
-            )
-            ia = r["aggs"]
-            out: dict = {}
-            for fn, col in specs:
-                a = _agg_alias(fn, col)
-                if fn == "avg":
-                    s = ia.get(f"sum_{col}")
-                    c = ia.get(f"count_{col}")
-                    out[a] = None if not c or s is None else s / c
-                else:
-                    out[a] = ia.get(a)
-            return {**r, "aggs": out}
         preds = normalize_dnf(predicates)
+        if not any(fn == "avg" for fn, _c in specs):
+            return self._agg_fold(table_name, specs, preds, version)
+        # AVG = SUM / COUNT(col), decomposed so both venues only ever
+        # fold mergeable aggregates (a per-file average is not
+        # mergeable; a per-file sum+count pair is). The division
+        # happens once, here, on the exact integer totals.
+        internal: list[tuple[str, str]] = []
+        for fn, col in specs:
+            for p in [("sum", col), ("count", col)] if fn == "avg" else [(fn, col)]:
+                if p not in internal:
+                    internal.append(p)
+        r = self._agg_fold(table_name, internal, preds, version)
+        ia = r["aggs"]
+        out: dict = {}
+        for fn, col in specs:
+            a = _agg_alias(fn, col)
+            if fn == "avg":
+                s = ia.get(f"sum_{col}")
+                c = ia.get(f"count_{col}")
+                out[a] = None if not c or s is None else s / c
+            else:
+                out[a] = ia.get(a)
+        return {**r, "aggs": out}
+
+    def _agg_fold(
+        self,
+        table_name: str,
+        specs: "list[tuple[str, str]]",
+        preds: list[list[tuple]],
+        version: int | None,
+    ) -> dict:
+        """The one aggregate-pushdown fold behind :meth:`agg_where` and
+        :meth:`count_where`: validated count/sum/min/max ``specs`` over
+        the normalized logical DNF ``preds``, in the snapshot's venue.
+        Returns :meth:`agg_where`'s dict."""
+        from pyairbyte_spark.filestats import dnf_to_column
+
         top, entries_df, man = self._scan_source(table_name, version)
         preds_phys = self._physical_dnf(top, preds)
-        has_dvs = bool((top or {}).get("delete_vectors"))
-
-        _alias = _agg_alias
-
-        def _agg_exprs():
-            out = []
-            for fn, col in specs:
-                a = _alias(fn, col)
-                if fn == "count":
-                    e = (
-                        F.count(F.lit(1))
-                        if col == "*"
-                        else F.count(F.col(col))
-                    )
-                    out.append(e.cast("long").alias(a))
-                else:
-                    out.append(getattr(F, fn)(F.col(col)).alias(a))
-            return out
-
-        def _scan_fallback(files_total=None, files_scanned=None) -> dict:
-            df = self.read_where(table_name, preds, version=version)
-            row = df.agg(*_agg_exprs()).collect()[0]
-            return {
-                "aggs": {_alias(f, c): row[_alias(f, c)] for f, c in specs},
-                "files_total": files_total,
-                "files_metadata": 0,
-                "files_scanned": files_scanned,
-            }
-
-        if entries_df is not None or has_dvs:
-            if (
-                entries_df is not None
-                and not has_dvs
-                and all(fn == "count" and col == "*" for fn, col in specs)
-            ):
-                # checkpoint-sidecar manifest, pure count(*): the
-                # distributed three-tier classifier already answers it
-                # without materializing the entry list on the driver
-                r = self.count_where(table_name, predicates, version=version)
-                return {
-                    "aggs": {
-                        _alias(fn, col): r["count"] for fn, col in specs
-                    },
-                    "files_total": r.get("files_total"),
-                    "files_metadata": r.get("files_metadata"),
-                    "files_scanned": r.get("files_scanned"),
-                }
-            if (
-                entries_df is not None
-                and not has_dvs
-                and all(
-                    fn in ("count", "min", "max", "sum")
-                    for fn, _c in specs
-                )
-            ):
-                # checkpoint-sidecar manifest, MIXED stats-answerable
-                # list (r13, was a pruned-scan degrade): the same
-                # distributed classifier, extended to fold min/max/
-                # count(col) footer contributions relationally — the
-                # metadata tier holds on exactly the ≥512-entry
-                # manifests where it matters most at 100× scale.
+        if entries_df is not None:
+            r = None
+            if not top.get("delete_vectors"):
                 r = self._agg_where_distributed(
-                    table_name, top, entries_df, preds, preds_phys, specs
+                    table_name, top, entries_df, preds, preds_phys, specs,
+                    version,
                 )
-                if r is not None:
-                    return r
-            return _scan_fallback()
-        # Which columns allow exact metadata min/max, keyed by their
-        # PHYSICAL stats name. Types come from the RECORDED schema
-        # JSON (entry-level newest first, then the carried top-level
-        # field, plus metadata-added columns) — building a Spark frame
-        # just to read types would re-infer schema over every data dir.
-        sch = next(
-            (
-                e.get("schema")
-                for e in reversed(man.get("entries") or [])
-                if e.get("schema")
-            ),
-            None,
-        ) or man.get("schema")
-        logical_types: dict[str, str] = {}
-        if sch:
-            mapping, _dropped = self._mapping_of(man)
-            _json_t = {
-                "long": "bigint",
-                "integer": "int",
-                "short": "smallint",
-                "byte": "tinyint",
-            }
-            for fld in json.loads(sch)["fields"]:
-                t = fld.get("type")
-                if isinstance(t, str):
-                    logical_types[mapping.get(fld["name"], fld["name"])] = (
-                        _json_t.get(t, t)
-                    )
-            for phys, spec in (man.get("added_columns") or {}).items():
-                logical_types.setdefault(
-                    mapping.get(phys, phys), spec["type"]
-                )
-        else:  # pre-schema manifest: fall back to the scan's own view
-            logical_types = {
-                f.name: f.dataType.simpleString()
-                for f in self._apply_mapping(
-                    self._read_manifest_df(table_name, man), man
-                ).schema.fields
-            }
+            if r is None:
+                r = self._agg_scan_fallback(table_name, specs, preds, version)
+            return r
         phys_of = {
             col: self._to_physical(man, col)
             for _fn, col in specs
             if col != "*"
         }
-        exact_minmax = {
-            col
-            for col in phys_of
-            if logical_types.get(col) in self._EXACT_STAT_TYPES
-        }
-        minmax_only = all(fn in ("min", "max") for fn, _c in specs)
-
-        def _meta_answer(f: dict) -> "dict | None":
-            return _agg_meta_answer(f, specs, phys_of, exact_minmax)
-
+        exact_minmax: set[str] = set()
+        if any(fn in ("min", "max") for fn, _c in specs):
+            types = self._logical_types(man)
+            if types is None:  # pre-schema manifest: the scan's own view
+                types = {
+                    f.name: f.dataType.simpleString()
+                    for f in self._apply_mapping(
+                        self._read_manifest_df(table_name, man), man
+                    ).schema.fields
+                }
+            exact_minmax = {
+                col
+                for col in phys_of
+                if types.get(col) in self._EXACT_STAT_TYPES
+            }
+        # MoR DVs poison footer stats: the metadata tier is off, while
+        # zone-map pruning stays sound and the scan applies the DVs.
+        meta_ok = not man.get("delete_vectors")
+        meta: dict = {}
         meta_files = total = 0
-        cand: dict[str, object] = {}
-        counts: dict[str, int] = {}
-        sums: dict[str, int] = {}
-
-        def _fold_meta(contrib: dict) -> None:
-            for (fn, col) in specs:
-                a = _alias(fn, col)
-                if a not in contrib:
-                    continue
-                if fn == "count":
-                    counts[a] = counts.get(a, 0) + contrib[a]
-                elif fn == "sum":
-                    sums[a] = sums.get(a, 0) + contrib[a]
-                elif fn == "min":
-                    cand[a] = (
-                        contrib[a]
-                        if a not in cand
-                        else min(cand[a], contrib[a])
-                    )
-                else:
-                    cand[a] = (
-                        contrib[a]
-                        if a not in cand
-                        else max(cand[a], contrib[a])
-                    )
-
         scan_entries: list[dict] = []
         exact_total = True
         for e in man.get("entries") or []:
-            live = e.get("buckets")
             files = e.get("files")
             if files is None:
+                # Pre-stats entry: the dir itself is the authority.
                 scan_entries.append(e)
                 exact_total = False
                 continue
             keep: list[dict] = []
             for f in files:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
+                if not _file_live(e.get("buckets"), f):
                     continue
                 total += 1
-                if not file_may_match_dnf(f, preds_phys):
-                    continue
-                contrib = (
-                    _meta_answer(f)
-                    if file_must_match_dnf(f, preds_phys)
-                    else None
+                c = _agg_file_tier(
+                    f, preds_phys, specs, phys_of, exact_minmax, meta_ok
                 )
-                if contrib is not None:
-                    _fold_meta(contrib)
-                    meta_files += 1
-                else:
+                if c == "S":
                     keep.append(f)
+                elif c != "P":
+                    meta = _agg_merge(specs, meta, c)
+                    meta_files += 1
             if keep:
                 scan_entries.append({**e, "files": keep})
-        if minmax_only and scan_entries:
+        if scan_entries and all(fn in ("min", "max") for fn, _c in specs):
             # Dominance pruning: a boundary file whose zone maps prove
             # it cannot beat any metadata candidate is never read
             # (stats.min is a lower bound even when truncated, so
             # stats.min >= cand proves "cannot lower the min"; dually
             # for max with the bumped upper bound).
-            pruned_entries: list[dict] = []
+            def _competes(f: dict) -> bool:
+                stats = f.get("stats") or {}
+                for fn, col in specs:
+                    cand = meta.get(_agg_alias(fn, col))
+                    v = (stats.get(phys_of[col]) or {}).get(fn)
+                    if cand is None or v is None:
+                        return True
+                    if v < cand if fn == "min" else v > cand:
+                        return True
+                return False
+
+            pruned: list[dict] = []
             for e in scan_entries:
                 if e.get("files") is None:
-                    pruned_entries.append(e)
+                    pruned.append(e)
                     continue
-                keep = []
-                for f in e["files"]:
-                    stats = f.get("stats") or {}
-                    dominated = True
-                    for fn, col in specs:
-                        a = _alias(fn, col)
-                        cs = stats.get(phys_of[col])
-                        v = (cs or {}).get(
-                            "min" if fn == "min" else "max"
-                        )
-                        if a not in cand or cs is None or v is None:
-                            dominated = False
-                            break
-                        if (fn == "min" and v < cand[a]) or (
-                            fn == "max" and v > cand[a]
-                        ):
-                            dominated = False
-                            break
-                    if not dominated:
-                        keep.append(f)
+                keep = [f for f in e["files"] if _competes(f)]
                 if keep:
-                    pruned_entries.append({**e, "files": keep})
-            scan_entries = pruned_entries
-        n_scan = sum(
-            len(e["files"]) if e.get("files") is not None else 0
-            for e in scan_entries
-        )
+                    pruned.append({**e, "files": keep})
+            scan_entries = pruned
+        n_scan = sum(len(e.get("files") or []) for e in scan_entries)
         scanned: dict = {}
         if scan_entries:
             df = self._apply_mapping(
                 self._entries_df(table_name, scan_entries, dv_man=man), man
             )
-            residual = dnf_to_column(preds)
+            residual = dnf_to_column(preds)  # logical names post-mapping
             if residual is not None:
                 df = df.filter(residual)
-            row = df.agg(*_agg_exprs()).collect()[0]
-            scanned = {a: row[a] for a in row.asDict()}
-        out_aggs: dict = {}
-        for fn, col in specs:
-            a = _alias(fn, col)
-            if fn == "count":
-                out_aggs[a] = counts.get(a, 0) + (scanned.get(a) or 0)
-            elif fn in ("sum", "avg"):
-                # metadata tier holds only for columns with harvested
-                # per-file sums (harvest_sums / build_sum_stats);
-                # everything else lands in the scan tier. SQL SUM over
-                # an empty match set is NULL, never 0.
-                vals = [
-                    v for v in (sums.get(a), scanned.get(a)) if v is not None
-                ]
-                out_aggs[a] = sum(vals) if vals else None
-            else:
-                vals = [
-                    v for v in (cand.get(a), scanned.get(a)) if v is not None
-                ]
-                if not vals:
-                    out_aggs[a] = None
-                else:
-                    out_aggs[a] = min(vals) if fn == "min" else max(vals)
+            scanned = df.agg(*_agg_scan_exprs(specs)).collect()[0].asDict()
         return {
-            "aggs": out_aggs,
+            "aggs": _agg_merge(specs, meta, scanned),
             "files_total": total if exact_total else None,
             "files_metadata": meta_files,
             "files_scanned": n_scan if exact_total else None,
@@ -5058,7 +4783,8 @@ class CommitLogTableStore(TableStore):
         for ``count(*)`` / freshness checks that a 100 TB table would
         otherwise answer with a full scan (Delta answers these from
         its log the same way). Returns None fields when any live file
-        predates the stats layer (then only a scan knows).
+        predates the stats layer or lacks a row count (then only a
+        scan knows).
 
         Above :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES` the aggregation
         runs as one small Spark job over the checkpoint sidecar (the
@@ -5067,72 +4793,56 @@ class CommitLogTableStore(TableStore):
         top, entries_df, man = self._scan_source(table_name, version)
         if entries_df is not None:
             return self._table_stats_distributed(top, entries_df)
-        exact = all(
-            e.get("files") is not None for e in man.get("entries") or []
-        )
-        n_files = 0
-        rows = 0
-        size = 0
+        exact = True
+        n_files = rows = size = 0
         col_stats: dict[str, dict] = {}
         dead_cols: set[str] = set()
         for e in man.get("entries") or []:
-            live = e.get("buckets")
+            if e.get("files") is None:
+                exact = False
             for f in e.get("files") or []:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
+                if not _file_live(e.get("buckets"), f):
                     continue
                 n_files += 1
+                if f.get("rows") is None:
+                    exact = False
                 rows += f.get("rows") or 0
                 size += f.get("bytes") or 0
-                fstats = f.get("stats") or {}
-                for c, s in fstats.items():
-                    if c == BUCKET_COL or c in dead_cols:
-                        continue
-                    cur = col_stats.get(c)
-                    if cur is None:
-                        # "files" counts live files CARRYING this
-                        # column's stats: min/max are proofs over the
-                        # whole table only when files == table files
-                        # (a stat-less legacy file could hold anything)
-                        col_stats[c] = {**s, "files": 1}
-                        continue
-                    cur["files"] = cur.get("files", 1) + 1
-                    try:
-                        cur["min"] = min(cur["min"], s["min"])
-                    except TypeError:
-                        dead_cols.add(c)
-                        col_stats.pop(c, None)
-                        continue
-                    if cur.get("max") is None or s.get("max") is None:
-                        cur["max"] = None
-                    else:
-                        cur["max"] = max(cur["max"], s["max"])
-                    if cur.get("nulls") is None or s.get("nulls") is None:
-                        cur["nulls"] = None
-                    else:
-                        cur["nulls"] += s["nulls"]
-        mapping, dropped = self._mapping_of(man)
-        col_stats = {
-            mapping.get(c, c): s
-            for c, s in col_stats.items()
-            if c not in dropped
-        }
-        # Merge-on-read deletes: file footers still count the deleted
-        # rows; the manifest's DV records carry the exact correction.
-        # (Per-column min/max/nulls stay upper bounds — same contract
-        # as Iceberg's stats over position deletes.)
-        rows -= sum(
-            d.get("rows") or 0 for d in man.get("delete_vectors") or []
+                for c, s in (f.get("stats") or {}).items():
+                    _zone_merge(col_stats, dead_cols, c, s)
+        return self._table_stats_out(man, exact, n_files, rows, size, col_stats)
+
+    def _table_stats_out(
+        self,
+        top: dict,
+        exact: bool,
+        n_files: int,
+        rows: int,
+        size: int,
+        col_stats: dict,
+    ) -> dict:
+        """:meth:`table_stats`'s result from either venue's fold: zone
+        maps keyed by logical name, and the row count corrected for
+        merge-on-read deletes — file footers still count the deleted
+        rows; the manifest's DV records carry the exact correction.
+        (Per-column min/max/nulls stay upper bounds — same contract as
+        Iceberg's stats over position deletes.)"""
+        mapping, dropped = self._mapping_of(top)
+        dv_rows = sum(
+            d.get("rows") or 0 for d in top.get("delete_vectors") or []
         )
         return {
-            "rows": rows if exact else None,
+            "rows": rows - dv_rows if exact else None,
             "files": n_files if exact else None,
             "bytes": size if exact else None,
-            "columns": col_stats if exact else {},
-            "version": man.get("version"),
+            "columns": {
+                mapping.get(c, c): s
+                for c, s in col_stats.items()
+                if c not in dropped and c != BUCKET_COL
+            }
+            if exact
+            else {},
+            "version": top.get("version"),
         }
 
     def _table_stats_distributed(self, top: dict, entries_df: DataFrame) -> dict:
@@ -5143,11 +4853,7 @@ class CommitLogTableStore(TableStore):
         import pandas as pd
 
         is_file = F.col("file_path").isNotNull()
-        is_live = is_file & (
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
+        is_live = _live_file_col()
         agg = entries_df.agg(
             F.sum(is_live.cast("long")).alias("files"),
             F.sum(F.when(is_live, F.col("rows"))).alias("rows"),
@@ -5163,42 +4869,14 @@ class CommitLogTableStore(TableStore):
         col_stats: dict[str, dict] = {}
         dead_cols: set[str] = set()
         if exact:
-            live = entries_df.filter(is_live).select("stats")
 
             def _partials(batches):
                 acc: dict[str, dict] = {}
                 dead: set[str] = set()
                 for pdf in batches:
                     for s in pdf["stats"]:
-                        if s is None:
-                            continue
-                        for c, st in json.loads(s).items():
-                            if c in dead:
-                                continue
-                            cur = acc.get(c)
-                            if cur is None:
-                                # "files" mirrors the driver loop: live
-                                # files CARRYING this column's stats
-                                acc[c] = {**st, "files": 1}
-                                continue
-                            cur["files"] = cur.get("files", 1) + 1
-                            try:
-                                cur["min"] = min(cur["min"], st["min"])
-                            except TypeError:
-                                dead.add(c)
-                                acc.pop(c, None)
-                                continue
-                            if cur.get("max") is None or st.get("max") is None:
-                                cur["max"] = None
-                            else:
-                                cur["max"] = max(cur["max"], st["max"])
-                            if (
-                                cur.get("nulls") is None
-                                or st.get("nulls") is None
-                            ):
-                                cur["nulls"] = None
-                            else:
-                                cur["nulls"] += st["nulls"]
+                        for c, st in json.loads(s or "{}").items():
+                            _zone_merge(acc, dead, c, st)
                 yield pd.DataFrame(
                     {
                         "col": list(acc) + sorted(dead),
@@ -5207,55 +4885,28 @@ class CommitLogTableStore(TableStore):
                     }
                 )
 
-            partials = live.mapInPandas(
-                _partials, schema="col string, stat string"
-            ).collect()
+            partials = (
+                entries_df.filter(is_live)
+                .select("stats")
+                .mapInPandas(_partials, schema="col string, stat string")
+                .collect()
+            )
             for r in partials:
                 c = r["col"]
                 if r["stat"] is None:
                     dead_cols.add(c)
                     col_stats.pop(c, None)
                     continue
-                if c in dead_cols:
-                    continue
                 st = json.loads(r["stat"])
-                cur = col_stats.get(c)
-                if cur is None:
-                    col_stats[c] = st
-                    continue
-                cur["files"] = (cur.get("files") or 0) + (
-                    st.get("files") or 0
-                )
-                try:
-                    cur["min"] = min(cur["min"], st["min"])
-                except TypeError:
-                    dead_cols.add(c)
-                    col_stats.pop(c, None)
-                    continue
-                if cur.get("max") is None or st.get("max") is None:
-                    cur["max"] = None
-                else:
-                    cur["max"] = max(cur["max"], st["max"])
-                if cur.get("nulls") is None or st.get("nulls") is None:
-                    cur["nulls"] = None
-                else:
-                    cur["nulls"] += st["nulls"]
-        mapping, dropped = self._mapping_of(top)
-        col_stats = {
-            mapping.get(c, c): s
-            for c, s in col_stats.items()
-            if c not in dropped and c != BUCKET_COL
-        }
-        dv_rows = sum(
-            d.get("rows") or 0 for d in top.get("delete_vectors") or []
+                _zone_merge(col_stats, dead_cols, c, st, st.get("files") or 0)
+        return self._table_stats_out(
+            top,
+            exact,
+            int(agg["files"] or 0),
+            int(agg["rows"] or 0),
+            int(agg["bytes"] or 0),
+            col_stats,
         )
-        return {
-            "rows": int(agg["rows"] or 0) - dv_rows if exact else None,
-            "files": int(agg["files"] or 0) if exact else None,
-            "bytes": int(agg["bytes"] or 0) if exact else None,
-            "columns": col_stats if exact else {},
-            "version": top.get("version"),
-        }
 
     # -- change data feed ---------------------------------------------------
 
@@ -7819,11 +7470,7 @@ class CommitLogTableStore(TableStore):
             kept_files: list[dict] = []
             touched_files: list[dict] = []
             for f in e["files"]:
-                dead = (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                )
+                dead = not _file_live(live, f)
                 if not dead and file_may_match_dnf(f, preds):
                     touched_files.append(f)
                 else:
@@ -8027,11 +7674,7 @@ class CommitLogTableStore(TableStore):
             kept_files: list[dict] = []
             touched_files: list[dict] = []
             for f in e["files"]:
-                dead = (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                )
+                dead = not _file_live(live, f)
                 if not dead and file_may_match_dnf(f, phys_preds):
                     touched_files.append(f)
                 else:
@@ -8303,16 +7946,10 @@ class CommitLogTableStore(TableStore):
         the header rows' ``extra`` JSON)."""
         if entries_df is not None:
             hdr = entries_df.filter(F.col("file_path").isNull()).select(
-                "entry_path",
-                F.get_json_object(F.col("extra"), "$.base").alias("base"),
+                "entry_path", _entry_base_col().alias("base")
             )
             return (
-                entries_df.filter(F.col("file_path").isNotNull())
-                .filter(
-                    F.col("entry_buckets").isNull()
-                    | F.col("bucket").isNull()
-                    | F.expr("array_contains(entry_buckets, bucket)")
-                )
+                entries_df.filter(_live_file_col())
                 .select("entry_path", "file_path", "rows")
                 .join(hdr, "entry_path", "left")
                 .select("entry_path", "file_path", "base", "rows")
@@ -8333,11 +7970,7 @@ class CommitLogTableStore(TableStore):
             (e["path"], f["path"], e.get("base"), f.get("rows"))
             for e in man.get("entries") or []
             for f in e.get("files") or []
-            if (
-                e.get("buckets") is None
-                or f.get("bucket") is None
-                or f["bucket"] in e["buckets"]
-            )
+            if _file_live(e.get("buckets"), f)
         ]
 
     def build_sum_stats(
@@ -8370,17 +8003,10 @@ class CommitLogTableStore(TableStore):
         )
         if sch is None:
             raise ValueError(f"table {table_name!r} has no schema source")
-        _json_t = {
-            "long": "bigint",
-            "integer": "int",
-            "short": "smallint",
-            "byte": "tinyint",
-        }
         integral = {
-            fld["name"]
-            for fld in json.loads(sch)["fields"]
-            if isinstance(fld.get("type"), str)
-            and _json_t.get(fld["type"], fld["type"]) in self._SUM_STAT_TYPES
+            c
+            for c, t in _recorded_types(sch).items()
+            if t in self._SUM_STAT_TYPES
         }
         if columns is not None:
             want = {self._to_physical(man, c) for c in columns}
@@ -8402,11 +8028,7 @@ class CommitLogTableStore(TableStore):
         for ei, e in enumerate(entries):
             live = e.get("buckets")
             for fi, f in enumerate(e.get("files") or []):
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
+                if not _file_live(live, f):
                     continue
                 stats = f.get("stats") or {}
                 if any(
@@ -9432,11 +9054,7 @@ class CommitLogTableStore(TableStore):
                     # unreachable (reads bucket-prune) and reclaimable.
                     live = e.get("buckets")
                     live_files.setdefault(e["path"], set()).update(
-                        f["path"]
-                        for f in files
-                        if live is None
-                        or f.get("bucket") is None
-                        or f["bucket"] in live
+                        f["path"] for f in files if _file_live(live, f)
                     )
         removed: list[str] = []
         tdir = self.table_path(table_name)
@@ -9628,11 +9246,7 @@ class CommitLogTableStore(TableStore):
             kept: list[dict] = []
             small: list[dict] = []
             for f in e["files"]:
-                dead = (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                )
+                dead = not _file_live(live, f)
                 if not dead and (f.get("bytes") or 0) < small_file_bytes:
                     small.append(f)
                 else:
@@ -10236,11 +9850,7 @@ class CommitLogTableStore(TableStore):
         for e in man.get("entries") or []:
             live = e.get("buckets")
             for f in e.get("files") or []:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
+                if not _file_live(live, f):
                     continue
                 stats = f.get("stats") or {}
                 live_stats.append(stats)

@@ -153,6 +153,12 @@ def test_mor_deletes_degrade_to_exact_scan(spark, store):
     store.delete_where("t", [[("id", "<", 100)]], mode="mor")
     r = store.agg_where("t", [("min", "id"), ("count", "*")])
     assert r["aggs"] == {"min_id": 100, "count_star": 3900}
+    # the driver loop keeps classifying: metadata tier off, every live
+    # file scanned (with the DVs applied) and counted
+    man = store._read_manifest("t", store.latest_version("t"))
+    assert r["files_total"] == sum(len(e["files"]) for e in man["entries"])
+    assert r["files_scanned"] == r["files_total"]
+    assert r["files_metadata"] == 0
 
 
 def test_agg_where_validation(spark, store):

@@ -11,6 +11,9 @@ log, extended here to predicates via the must-match dual of skipping.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,6 +90,12 @@ def test_count_exact_under_mor_deletes(spark, store):
     r = store.count_where("t", preds)
     assert r["count"] == _truth(store, preds) == 2490
     assert r["files_metadata"] == 0
+    # ...while zone-map pruning still holds: every live file is
+    # counted, only the may-match ones are scanned (integers, not None)
+    man = store._read_manifest("t", store.latest_version("t"))
+    spans = [f["stats"]["id"] for e in man["entries"] for f in e["files"]]
+    assert r["files_total"] == len(spans)
+    assert r["files_scanned"] == sum(1 for s in spans if s["min"] < 2500)
     # ...and the unfiltered count corrects via the manifest's DV rows
     # without reading anything
     r = store.count_where("t")
@@ -153,6 +162,66 @@ def test_count_distributed_equals_driver(spark, tmp_path, monkeypatch):
     dist.COUNT_SCAN_FALLBACK_MAX = 0
     r = dist.count_where("t", [("id", "<", cut)])
     assert r["count"] == cut and r["files_metadata"] == 0
+    del dist.COUNT_SCAN_FALLBACK_MAX
+    # count_where is agg_where's count(*) on both venues, before and
+    # after a merge-on-read (DV-bearing) delete: the driver scans with
+    # the DVs applied, the distributed venue degrades to one pruned scan
+    preds = [("id", "<", 7500)]
+    for mor in (False, True):
+        if mor:
+            drv.delete_where("t", [[("id", "<", 10)]], mode="mor")
+        for st in (drv, dist):
+            r = st.count_where("t", preds)
+            agg = st.agg_where("t", [("count", "*")], preds)
+            assert r["count"] == agg["aggs"]["count_star"] == 7500 - 10 * mor
+
+
+def _strip_schemas(st, table):
+    """Remove every recorded ``schema`` key from the table's stored
+    commits; returns a fresh store over the table."""
+
+    def patch(node):
+        if isinstance(node, dict):
+            node.pop("schema", None)
+            for v in node.values():
+                patch(v)
+        elif isinstance(node, list):
+            for v in node:
+                patch(v)
+
+    d = st._commits_dir(table)
+    for name in os.listdir(d):
+        if name.endswith(".json"):
+            p = os.path.join(d, name)
+            with open(p) as fh:
+                doc = json.load(fh)
+            patch(doc)
+            with open(p, "w") as fh:
+                json.dump(doc, fh)
+    return CommitLogTableStore(
+        st.spark, os.path.dirname(st.root), os.path.basename(st.root)
+    )
+
+
+def test_metadata_count_without_recorded_schema_runs_no_job(spark, store):
+    """Column types are resolved only for min/max: a count(*) answered
+    wholly from metadata on a manifest with no recorded schema must not
+    pay a schema-inference job."""
+    _seed(spark, store, n=2000, files=2)
+    fresh = _strip_schemas(store, "t")
+    man = fresh._read_manifest("t", fresh.latest_version("t"))
+    assert fresh._logical_types(man) is None
+    sc = spark.sparkContext
+    sc.setJobGroup("count-no-schema", "metadata-answered count_where")
+    try:
+        r = fresh.count_where("t", [("id", ">=", 0)])
+        agg = fresh.agg_where("t", [("count", "*")], [("id", ">=", 0)])
+    finally:
+        sc.setJobGroup(None, None)
+    assert r["count"] == 2000 and r["files_scanned"] == 0
+    assert r["files_metadata"] == r["files_total"] >= 1
+    assert agg["aggs"]["count_star"] == 2000 and agg["files_scanned"] == 0
+    assert sc.statusTracker().getJobIdsForGroup("count-no-schema") == []
 
 
 def test_count_on_clone_and_branch(spark, store):
