@@ -215,7 +215,7 @@ class TableStore:
         self._bloom_cache: dict[tuple[str, str], dict] = {}
         self._bloom_cache_bytes = 0
         # (table, ref) pairs whose index exceeds the cache cap: probed
-        # relationally (_bloom_probe_keys), never collected again.
+        # relationally (_bloom_join), never collected again.
         self._bloom_oversize: set[tuple[str, str]] = set()
         # Timestamp stats require the MICROS physical type — INT96
         # (Spark's legacy default) writes no parquet min/max, which
@@ -1169,6 +1169,74 @@ def _agg_file_tier(
         return "S"
     contrib = _agg_meta_answer(f, specs, phys_of, exact_minmax)
     return "S" if contrib is None else contrib
+
+
+def _newest_schema(man: "dict | None") -> "str | None":
+    """A manifest's newest recorded physical schema JSON: the newest
+    entry's ``schema``, else the top-level field every commit carries
+    (so a manifest with zero entries still has one), else None."""
+    man = man or {}
+    return next(
+        (
+            e["schema"]
+            for e in reversed(man.get("entries") or [])
+            if e.get("schema")
+        ),
+        man.get("schema") or None,
+    )
+
+
+def _file_may_survive(
+    f: dict, fb: "dict | None", preds: "list[list[tuple]]"
+) -> bool:
+    """Whether scan planning keeps one live file for the physical DNF
+    ``preds``: its zone maps must admit a match, then its bloom bits
+    ``fb`` (``{col: (m, k, bits)}``) must too. ``fb`` is None for a
+    file the index does not cover, which is conservatively kept.
+    Module-level so the driver loop and the pandas UDF of
+    :func:`_survive_udf` run the same code."""
+    from pyairbyte_spark import bloom
+    from pyairbyte_spark.filestats import file_may_match_dnf
+
+    if not file_may_match_dnf(f, preds):
+        return False
+    return fb is None or bool(bloom.dnf_may_match(fb, preds))
+
+
+def _bloom_bits(d) -> "tuple[int, int, bytes]":
+    """One bloom-index row (or joined struct) as ``(m, k, bits)``."""
+    return int(d["m"]), int(d["k"]), bytes(d["bits"])
+
+
+def _survive_udf(preds: "list[list[tuple]]"):
+    """A boolean pandas UDF over ``(stats, rows, sv, __blooms)``
+    applying :func:`_file_may_survive` per row: the sidecar's JSON
+    zone maps and the bloom structs joined by
+    :meth:`CommitLogTableStore._bloom_join`. A null ``__blooms``
+    (uncovered; None or NaN after the Arrow->pandas conversion) and
+    null stats/rows keep the file."""
+    import numpy as np
+
+    @F.pandas_udf("boolean")
+    def _survives(
+        stats: pd.Series, rows: pd.Series, sv: pd.Series, blooms: pd.Series
+    ) -> pd.Series:
+        out = []
+        for s, r, v, b in zip(stats, rows, sv, blooms):
+            fe = {
+                "stats": None if s is None else json.loads(s),
+                "rows": None if pd.isna(r) else int(r),
+                "sv": None if pd.isna(v) else int(v),
+            }
+            fb = (
+                {d["col"]: _bloom_bits(d) for d in b}
+                if isinstance(b, (list, tuple, np.ndarray)) and len(b)
+                else None
+            )
+            out.append(_file_may_survive(fe, fb, preds))
+        return pd.Series(out)
+
+    return _survives
 
 
 def _agg_scan_exprs(
@@ -2571,7 +2639,7 @@ class CommitLogTableStore(TableStore):
     _DV_BROADCAST_MAX_BYTES = 8 * 1024 * 1024
     _DV_BROADCAST_MAX_ROWS = 1_000_000
     # Driver-side bloom cache budget (bitset bytes, the dominant term;
-    # see _bloom_lookup). ~9.6 bits/key at 1% fpr → 64 MiB covers a
+    # see _bloom_map). ~9.6 bits/key at 1% fpr → 64 MiB covers a
     # ~55M-key index; anything bigger belongs to the distributed probe
     # venue anyway.
     _BLOOM_CACHE_MAX_BYTES = 64 * 1024 * 1024
@@ -2717,15 +2785,7 @@ class CommitLogTableStore(TableStore):
         """Zero-row frame with the snapshot's newest physical schema
         (entry-level first, then the carried top-level field), or None
         for pre-schema manifests."""
-        man = manifest or {}
-        schema_json = next(
-            (
-                e.get("schema")
-                for e in reversed(man.get("entries") or [])
-                if e.get("schema")
-            ),
-            None,
-        ) or man.get("schema")
+        schema_json = _newest_schema(manifest)
         if schema_json is None:
             return None
         from pyspark.sql.types import StructType
@@ -2982,14 +3042,9 @@ class CommitLogTableStore(TableStore):
             return None
         try:
             snap = self._latest_commit(table_name)
-            sj = next(
-                e.get("schema")
-                for e in reversed(snap[1].get("entries") or [])
-                if e.get("schema")
-            )
             from pyspark.sql.types import StructType
 
-            st = StructType.fromJson(json.loads(sj))
+            st = StructType.fromJson(json.loads(_newest_schema(snap[1])))
             return self.spark.createDataFrame(
                 [tuple(r[n] for n in st.names) for r in rows], st
             )
@@ -3149,14 +3204,7 @@ class CommitLogTableStore(TableStore):
         # Newest known PHYSICAL schema rides every commit so a manifest
         # with ZERO entries (a DELETE that dropped every data dir) still
         # reads as an empty frame after vacuum reclaims the files.
-        sch = man.get("schema") or next(
-            (
-                e.get("schema")
-                for e in reversed(man.get("entries") or [])
-                if e.get("schema")
-            ),
-            None,
-        )
+        sch = _newest_schema(man)
         if sch:
             out["schema"] = sch
         return out
@@ -3754,97 +3802,40 @@ class CommitLogTableStore(TableStore):
         entries_df: DataFrame,
         preds: list[list[tuple]],
     ) -> dict:
-        """Zone-map pruning as a Spark job over the sidecar frame: the
-        liveness rule runs as JVM filters, the (pure-Python) DNF stats
-        check runs as an Arrow-batched pandas UDF over exactly the
-        same ``file_may_match_dnf`` the driver path uses — one
-        semantics, two execution venues. Only surviving paths are
+        """:meth:`plan_scan` over the sidecar frame: the liveness rule
+        runs as JVM filters, the bloom bits join on through
+        :meth:`_bloom_join`, and :func:`_file_may_survive` runs in the
+        Arrow-batched pandas UDF of :func:`_survive_udf` — the driver
+        loop's rule in a second venue. Only surviving paths are
         collected."""
-        import numpy as np
-        import pandas as pd
-
-        from pyairbyte_spark.filestats import file_may_match_dnf
-
         root = self.table_path(table_name)
         file_rows = entries_df.filter(F.col("file_path").isNotNull())
         live = entries_df.filter(_live_file_col())
         bloom_meta = top.get("bloom_index")
-        bloom_cols = (
-            self._bloom_pred_cols(bloom_meta, preds) if bloom_meta else set()
+        bloom_cols = self._bloom_pred_cols(bloom_meta, preds)
+        joined = (
+            self._bloom_join(live, table_name, bloom_meta, bloom_cols)
+            if bloom_cols
+            else None
         )
-        if preds and bloom_cols:
-            # Bloom bits join onto the sidecar's file rows (left: files
-            # appended after the build have no row and stay unprunable)
-            # and the membership test runs INSIDE the same pandas UDF
-            # as the zone-map DNF — one relational pass, same venue.
-            bpath = self._bloom_index_path(table_name, bloom_meta)
-            bdf = (
-                self.spark.read.parquet(
-                    self.io.spark_read_path(bpath) or bpath
-                )
-                .filter(F.col("col").isin(sorted(bloom_cols)))
-                .groupBy("entry_path", "file_path")
-                .agg(
-                    F.collect_list(
-                        F.struct("col", "m", "k", "bits")
-                    ).alias("__blooms")
-                )
-            )
-            live = live.join(bdf, ["entry_path", "file_path"], "left")
-        else:
-            live = live.withColumn(
+        live = (
+            joined
+            if joined is not None
+            else live.withColumn(
                 "__blooms",
                 F.lit(None).cast(
                     "array<struct<col:string,m:int,k:int,bits:binary>>"
                 ),
             )
-        if preds:
-            preds_b = preds  # closure-shipped to executors
-
-            @F.pandas_udf("boolean")
-            def _match(
-                stats: pd.Series,
-                rows: pd.Series,
-                sv: pd.Series,
-                blooms: pd.Series,
-            ) -> pd.Series:
-                from pyairbyte_spark.bloom import dnf_may_match
-
-                out = []
-                for s, r, v, b in zip(stats, rows, sv, blooms):
-                    fe = {
-                        "stats": None if s is None else json.loads(s),
-                        "rows": None if pd.isna(r) else int(r),
-                        "sv": None if pd.isna(v) else int(v),
-                    }
-                    ok = bool(file_may_match_dnf(fe, preds_b))
-                    # uncovered files join as null (None or NaN
-                    # depending on the Arrow->pandas conversion):
-                    # conservatively unprunable either way
-                    if ok and isinstance(b, (list, tuple, np.ndarray)) and len(b):
-                        fb = {
-                            d["col"]: (
-                                int(d["m"]),
-                                int(d["k"]),
-                                bytes(d["bits"]),
-                            )
-                            for d in b
-                        }
-                        ok = bool(dnf_may_match(fb, preds_b))
-                    out.append(ok)
-                return pd.Series(out)
-
-            flagged = live.withColumn(
-                "__match",
-                _match(
-                    F.col("stats"),
-                    F.col("rows"),
-                    F.col("sv"),
-                    F.col("__blooms"),
-                ),
+        )
+        flagged = live.withColumn(
+            "__match",
+            _survive_udf(preds)(
+                F.col("stats"), F.col("rows"), F.col("sv"), F.col("__blooms")
             )
-        else:
-            flagged = live.withColumn("__match", F.lit(True))
+            if preds
+            else F.lit(True),
+        )
         agg = flagged.agg(
             F.count(F.lit(1)).alias("t"),
             F.sum(F.col("__match").cast("long")).alias("s"),
@@ -3852,9 +3843,6 @@ class CommitLogTableStore(TableStore):
         ).collect()[0]
         total = int(agg["t"] or 0)
         selected = int(agg["s"] or 0)
-        bloom_uncovered = (
-            int(agg["u"] or 0) if (preds and bloom_cols) else None
-        )
         groups: list[dict] = []
         # Entry header rows carry the entry-level keys in ``extra``:
         # SHALLOW-CLONE entries reference another table's dir, and the
@@ -4005,8 +3993,8 @@ class CommitLogTableStore(TableStore):
             "manifest": top,
             "distributed": True,
         }
-        if bloom_uncovered is not None:
-            plan["files_bloom_uncovered"] = bloom_uncovered
+        if joined is not None:
+            plan["files_bloom_uncovered"] = int(agg["u"] or 0)
         if not groups:
             # Everything skipped: read_where still needs a schema
             # source; hand it ONE live file instead of the manifest's
@@ -4032,27 +4020,39 @@ class CommitLogTableStore(TableStore):
         *,
         version: int | None = None,
     ) -> dict:
-        """Driver-side data skipping: resolve the snapshot's live files
-        and drop every file whose footer stats prove no row can match
-        ``predicates`` (zone maps; see ``filestats.py``). Returns
-        ``{"files_total", "files_selected", "groups"}`` where
+        """Data skipping: resolve the snapshot's live files and keep
+        only those that may hold a row matching ``predicates``.
+        Returns ``{"files_total", "files_selected", "groups"}`` where
         ``files_total`` counts the snapshot's LIVE files — the
         total/selected gap is exactly the I/O data skipping saved.
 
-        Pure manifest arithmetic for small snapshots: no filesystem
-        listing, no Spark job. When the snapshot's checkpoint sidecar
-        exceeds :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES`, the entry list
-        is NOT materialized on the driver at all — the sidecar (one
-        parquet row per data file) is read as a Spark DataFrame, the
-        delta chain and zone-map DNF are applied relationally, and
-        only the SURVIVING file paths cross back to the driver
-        (Delta's distributed checkpoint-scan pattern). Driver memory
-        stays O(matching files), flat in table size.
+        One per-file rule, :func:`_file_may_survive`: a file is
+        dropped when its zone maps prove no row matches (footer stats;
+        see ``filestats.py``), or when the table's bloom index covers
+        the file and its bits rule out every ``=``/``in`` lookup on an
+        indexed column. A file without index rows for the predicate's
+        indexed columns is kept. When the predicate uses an indexed
+        column and the index was read, ``files_bloom_uncovered`` is
+        the number of LIVE files without such rows; a removed index
+        dir prunes nothing and omits the key.
 
-        At 100 TB a selective predicate launches the scan over the
-        matching sliver of files instead of the table.
+        Two venues run the rule. A snapshot whose checkpoint sidecar
+        is below :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES` is planned on
+        the driver from the materialized manifest: pure manifest
+        arithmetic, no Spark job, with the index's bits cached
+        driver-side (:meth:`_bloom_map`). An index over
+        ``_BLOOM_CACHE_MAX_BYTES`` never reaches the driver: after the
+        zone maps, one job joins every live file key to the index
+        (:meth:`_bloom_join`) and collects the keys its bits admit;
+        it runs only when some file survives the zone maps. Above the
+        threshold the entry list is NOT materialized on the driver at
+        all: the sidecar (one parquet row per data file) is read as a
+        Spark DataFrame, the index joins on, the rule runs in a pandas
+        UDF, and only the SURVIVING file paths cross back to the
+        driver (Delta's distributed checkpoint-scan pattern). Driver
+        memory stays O(matching files), flat in table size.
         """
-        from pyairbyte_spark.filestats import file_may_match_dnf, normalize_dnf
+        from pyairbyte_spark.filestats import normalize_dnf
 
         preds = normalize_dnf(predicates)
         top, entries_df, man = self._scan_source(table_name, version)
@@ -4063,91 +4063,79 @@ class CommitLogTableStore(TableStore):
             return self._plan_scan_distributed(
                 table_name, top, entries_df, preds
             )
-        blooms = self._bloom_lookup(table_name, man, preds)
-        oversize = blooms is self._BLOOM_OVERSIZE
-        groups: list[dict] = []
-        total = selected = uncovered = 0
-        cand_keys: list[tuple[str, str]] = []
+        meta = man.get("bloom_index")
+        cols = self._bloom_pred_cols(meta, preds)
+        blooms = self._bloom_map(table_name, meta) if cols else None
+        total = uncovered = 0
+        kept: list[tuple[dict, list[dict]]] = []  # (entry, surviving files)
         for e in man.get("entries") or []:
-            base = os.path.join(self._entry_base(table_name, e), e["path"])
             live = e.get("buckets")
-            files = e.get("files")
-            if files is None:
-                # Pre-stats manifest: read the whole dir, row-filter
-                # dead buckets (correct, just unskippable).
-                groups.append(
-                    {
-                        "base": base,
-                        "paths": None,
-                        "live": live,
-                        "schema": e.get("schema"),
-                    }
-                )
-                continue
-            keep: list[str] = []
-            keep_keys: list[tuple[str, str]] = []
-            for f in files:
+            fs: list[dict] = []
+            for f in e.get("files") or []:
                 if not _file_live(live, f):
                     continue  # superseded bucket data — never live
                 total += 1
-                if (
-                    isinstance(blooms, dict)
-                    and (e["path"], f["path"]) not in blooms
-                ):
-                    uncovered += 1  # coverage watermark (live files)
-                if not file_may_match_dnf(f, preds):
-                    continue
+                fb = None
                 if isinstance(blooms, dict):
-                    from pyairbyte_spark.bloom import dnf_may_match
-
                     fb = blooms.get((e["path"], f["path"]))
-                    # Files without bloom rows (post-build appends)
-                    # are conservatively kept.
-                    if fb and not dnf_may_match(fb, preds):
-                        continue
-                elif oversize:
-                    # Defer to the relational probe below; remember
-                    # the key alongside its path for post-filtering.
-                    cand_keys.append((e["path"], f["path"]))
-                    keep_keys.append((e["path"], f["path"]))
-                keep.append(os.path.join(base, f["path"]))
-                selected += 1
-            if keep:
-                g: dict = {
-                    "base": base,
-                    "paths": keep,
-                    "live": live,
-                    "schema": e.get("schema"),
-                }
-                if oversize:
-                    g["__keys"] = keep_keys
-                groups.append(g)
-        if oversize and cand_keys:
-            probe = self._bloom_probe_keys(
-                table_name, man["bloom_index"], preds, cand_keys
-            )
-            if probe is None:  # index unreadable: keep everything
-                for g in groups:
-                    g.pop("__keys", None)
-            else:
-                keep_set, uncovered = probe
-                pruned: list[dict] = []
-                selected = 0
-                for g in groups:
-                    ks = g.pop("__keys", None)
-                    if ks is None:
-                        pruned.append(g)
-                        continue
-                    paths = [
-                        p for p, k in zip(g["paths"], ks) if k in keep_set
-                    ]
-                    selected += len(paths)
-                    if paths:
-                        pruned.append({**g, "paths": paths})
-                groups = pruned
+                    if fb is None or cols.isdisjoint(fb):
+                        fb = None
+                        uncovered += 1
+                if _file_may_survive(f, fb, preds):
+                    fs.append(f)
+            kept.append((e, fs))
+        if blooms is self._BLOOM_OVERSIZE:
+            # Zone maps ran above; the bits of an over-cap index never
+            # reach the driver. One job joins every live file key to
+            # the index and collects the keys its bits admit.
+            blooms = joined = None
+            if any(fs for _e, fs in kept):
+                joined = self._bloom_join(
+                    self._live_files_frame(table_name, man, None),
+                    table_name,
+                    meta,
+                    cols,
+                )
+            if joined is not None:
+                nul = F.lit(None)
+                admits = _survive_udf(preds)(
+                    nul.cast("string"),
+                    nul.cast("long"),
+                    nul.cast("long"),
+                    F.col("__blooms"),
+                )
+                rows = (
+                    joined.filter(admits)
+                    .select("entry_path", "file_path", F.col("__blooms").isNull())
+                    .collect()
+                )
+                blooms = {(r[0], r[1]): r[2] for r in rows}  # key -> uncovered
+                uncovered = sum(blooms.values())
+                kept = [
+                    (e, [f for f in fs if (e["path"], f["path"]) in blooms])
+                    for e, fs in kept
+                ]
+        groups: list[dict] = []
+        for e, fs in kept:
+            if e.get("files") is None or fs:
+                base = os.path.join(self._entry_base(table_name, e), e["path"])
+                # A pre-stats entry (no file list) reads its whole dir
+                # with dead buckets row-filtered: correct, unskippable.
+                groups.append(
+                    {
+                        "base": base,
+                        "paths": (
+                            None
+                            if e.get("files") is None
+                            else [os.path.join(base, f["path"]) for f in fs]
+                        ),
+                        "live": e.get("buckets"),
+                        "schema": e.get("schema"),
+                    }
+                )
         out = {
             "files_total": total,
-            "files_selected": selected,
+            "files_selected": sum(len(fs) for _e, fs in kept),
             "groups": groups,
             "predicates": preds,
             "manifest": man,
@@ -4268,14 +4256,7 @@ class CommitLogTableStore(TableStore):
         carried top-level field, plus metadata-added columns), or None
         when nothing is recorded — building a Spark frame just to read
         types would re-infer schema over every data dir."""
-        sch = next(
-            (
-                e.get("schema")
-                for e in reversed(man.get("entries") or [])
-                if e.get("schema")
-            ),
-            None,
-        ) or man.get("schema")
+        sch = _newest_schema(man)
         if not sch:
             return None
         mapping, _dropped = self._mapping_of(man)
@@ -4335,11 +4316,6 @@ class CommitLogTableStore(TableStore):
 
         from pyairbyte_spark.filestats import dnf_to_column
 
-        # Pre-stats dir entries have no per-file rows to classify.
-        if not entries_df.filter(
-            F.col("file_path").isNull() & ~F.col("has_files")
-        ).isEmpty():
-            return None
         # contributions round-trip through JSON keyed by alias; a
         # column name that isn't a plain word would break the
         # get_json_object path ($.count_a.b traverses!) and silently
@@ -4382,14 +4358,24 @@ class CommitLogTableStore(TableStore):
                 out.append(c if isinstance(c, str) else json.dumps(c))
             return pd.Series(out)
 
-        flagged = entries_df.filter(_live_file_col()).withColumn(
-            "__c", _cls(F.col("stats"), F.col("rows"), F.col("sv"))
+        # Only live file rows are classified (``__c`` is null on the
+        # rest); the same pass counts pre-stats dir entries, which have
+        # no per-file rows to classify.
+        flagged = entries_df.withColumn(
+            "__c",
+            F.when(
+                _live_file_col(),
+                _cls(F.col("stats"), F.col("rows"), F.col("sv")),
+            ),
         )
-        is_meta = ~F.col("__c").isin("P", "S")
+        is_meta = F.col("__c").isNotNull() & ~F.col("__c").isin("P", "S")
         agg_exprs = [
-            F.count(F.lit(1)).alias("__t"),
+            F.count("__c").alias("__t"),
             F.sum((F.col("__c") == "S").cast("long")).alias("__sf"),
             F.sum(is_meta.cast("long")).alias("__mf"),
+            F.sum(
+                (F.col("file_path").isNull() & ~F.col("has_files")).cast("long")
+            ).alias("__pre"),
         ]
         for fn, col in specs:
             a = _agg_alias(fn, col)
@@ -4419,6 +4405,8 @@ class CommitLogTableStore(TableStore):
                     ).alias(a)
                 )
         row = flagged.agg(*agg_exprs).collect()[0].asDict()
+        if row["__pre"]:
+            return None
         n_scan = int(row["__sf"] or 0)
         files_total = int(row["__t"] or 0)
         if n_scan > self.COUNT_SCAN_FALLBACK_MAX:
@@ -6179,14 +6167,7 @@ class CommitLogTableStore(TableStore):
             man = snap[1] if snap else None
             simple = primary_keys is None and self._local_stageable(df)
             if simple and man is not None:
-                newest = next(
-                    (
-                        e.get("schema")
-                        for e in reversed(man.get("entries") or [])
-                        if e.get("schema")
-                    ),
-                    None,
-                )
+                newest = _newest_schema(man)
                 # The job-free path only for the plain case the
                 # protocol tables actually are: no checks, no schema
                 # machinery, no bucketing, no clustering, and a
@@ -7919,6 +7900,12 @@ class CommitLogTableStore(TableStore):
     # single write task — and no later relational probe task — owns
     # the whole index.
     _BLOOM_SHARD_TARGET_BYTES = 64 << 20
+    # The bloom index parquet: one row per (file, column), written by
+    # build_bloom_index and read back with this schema.
+    _BLOOM_SCHEMA = (
+        "entry_path string, file_path string, col string, "
+        "m int, k int, bits binary"
+    )
 
     def _bloom_index_path(self, table_name: str, meta: dict) -> str:
         """Absolute dir of a bloom index: this table's root, or the
@@ -7996,11 +7983,7 @@ class CommitLogTableStore(TableStore):
         "columns", "version"}``."""
         version = self.latest_version(table_name)
         man = self._read_manifest(table_name, version)
-        sch = man.get("schema") or next(
-            (e.get("schema") for e in man.get("entries") or []
-             if e.get("schema")),
-            None,
-        )
+        sch = _newest_schema(man)
         if sch is None:
             raise ValueError(f"table {table_name!r} has no schema source")
         integral = {
@@ -8197,16 +8180,17 @@ class CommitLogTableStore(TableStore):
                     )
         root = self.table_path(table_name)
         files_df = self._live_files_frame(table_name, man, entries_df)
-        prior_meta = top.get("bloom_index") or {}
-        prior_ref = prior_meta.get("ref")
+        prior_meta = top.get("bloom_index")
         carried = None
         uncov = files_df
         prior_disk = 0
-        if only_missing and prior_ref:
+        prior_df = (
+            self._bloom_read(table_name, prior_meta)
+            if only_missing and prior_meta
+            else None
+        )
+        if prior_df is not None:  # a vacuumed prior index re-covers all
             ppath = self._bloom_index_path(table_name, prior_meta)
-            prior_df = self.spark.read.parquet(
-                self.io.spark_read_path(ppath) or ppath
-            )
             live_keys = files_df.select("entry_path", "file_path")
             # Relational carry: prior rows for still-live files keep,
             # dead-file rows compact away — no driver round-trip.
@@ -8222,7 +8206,7 @@ class CommitLogTableStore(TableStore):
                 prior_disk = sum(
                     sz for _n, sz in self.io.list_files(ppath)
                 )
-            except Exception:
+            except OSError:
                 prior_disk = 0
         # Uncovered-file accounting: a fresh build over a materialized
         # manifest has the whole live-file list driver-resident
@@ -8359,9 +8343,7 @@ class CommitLogTableStore(TableStore):
                 return pd.DataFrame(out)
 
             built = src.groupBy("__file").applyInPandas(
-                fold,
-                "entry_path string, file_path string, col string, "
-                "m int, k int, bits binary",
+                fold, self._BLOOM_SCHEMA
             )
         frames = built
         if carried is not None:
@@ -8470,7 +8452,8 @@ class CommitLogTableStore(TableStore):
         coverage DECAYS until an ``only_missing=True`` rebuild (or a
         ``refresh_bloom=True`` compact/optimize); this is the number
         to alert on — ``read_where`` stays EXACT either way, uncovered
-        files are merely unprunable. Returns ``{"columns", "fpr",
+        files are merely unprunable. A removed index dir or an
+        unreadable part covers nothing. Returns ``{"columns", "fpr",
         "files_total", "files_covered", "files_uncovered"}``, or None
         when the table has no index. Cost: with a driver-resident
         manifest, a driver-side fold over the index KEYS (reused from
@@ -8493,8 +8476,8 @@ class CommitLogTableStore(TableStore):
             # loading O(index-bytes) bits through _bloom_map (which
             # would also evict hot plan_scan entries from the shared
             # cache); an already-cached map is reused for free.
-            # Oversize or unreadable indexes keep the relational join
-            # below (never pulled to the driver).
+            # Oversize indexes keep the relational join below (never
+            # pulled to the driver).
             key = (table_name, meta["ref"])
             mp = self._bloom_cache.get(key)
             cov = set(mp.keys()) if mp is not None else None
@@ -8511,21 +8494,15 @@ class CommitLogTableStore(TableStore):
                     "files_uncovered": len(files) - covered,
                 }
         files_df = self._live_files_frame(table_name, man, entries_df)
-        path = self._bloom_index_path(table_name, meta)
-        try:
+        idx = self._bloom_read(table_name, meta)
+        if idx is None:
+            total, covered = int(files_df.count()), 0
+        else:
             keys = (
-                self.spark.read.parquet(
-                    self.io.spark_read_path(path) or path
-                )
-                .select("entry_path", "file_path")
+                idx.select("entry_path", "file_path")
                 .distinct()
                 .withColumn("__cov", F.lit(1))
             )
-        except Exception:  # index dir vacuumed: nothing is covered
-            keys = None
-        if keys is None:
-            total, covered = int(files_df.count()), 0
-        else:
             agg = (
                 files_df.join(keys, ["entry_path", "file_path"], "left")
                 .agg(
@@ -8544,7 +8521,7 @@ class CommitLogTableStore(TableStore):
         }
 
     @staticmethod
-    def _bloom_pred_cols(bloom_meta: dict, preds: list) -> set[str]:
+    def _bloom_pred_cols(bloom_meta: dict | None, preds: list) -> set[str]:
         """Indexed physical columns that appear as =/in conjuncts."""
         idx = set((bloom_meta or {}).get("columns") or [])
         used: set[str] = set()
@@ -8555,29 +8532,88 @@ class CommitLogTableStore(TableStore):
         return used
 
     # Sentinel: a bloom index too large to cache driver-side. plan_scan
-    # reacts by probing membership RELATIONALLY (_bloom_probe_keys) —
+    # reacts by probing membership RELATIONALLY (_bloom_join) —
     # nothing index-sized crosses the driver, however small the
     # table's manifest happens to be.
     _BLOOM_OVERSIZE = object()
 
-    def _bloom_lookup(self, table_name: str, man: dict, preds: list):
-        """Driver-side bloom map for the predicate's indexed columns:
-        a ``{(entry, file): {col: (m, k, bits)}}`` dict when the index
-        fits the byte-capped cache, :attr:`_BLOOM_OVERSIZE` when it
-        doesn't, or None when the index can't help this predicate.
-        Cached per (table, ref) — index dirs are immutable, a rebuild
-        changes the ref."""
-        meta = man.get("bloom_index")
-        if not meta or not self._bloom_pred_cols(meta, preds):
+    def _bloom_read(self, table_name: str, meta: dict) -> "DataFrame | None":
+        """The index parquet as a Spark frame, or None when its dir is
+        gone (vacuumed with an old snapshot). The schema is given, so
+        no footer-inference job runs; a part that cannot be read
+        (truncated, removed mid-scan) yields no rows, so the files it
+        held read as uncovered, as they do on the driver
+        (:meth:`_bloom_parts`)."""
+        from pyspark.errors import AnalysisException
+
+        path = self._bloom_index_path(table_name, meta)
+        try:
+            return (
+                self.spark.read.schema(self._BLOOM_SCHEMA)
+                .option("ignoreCorruptFiles", "true")
+                .option("ignoreMissingFiles", "true")
+                .parquet(self.io.spark_read_path(path) or path)
+            )
+        except AnalysisException:
             return None
-        return self._bloom_map(table_name, meta)
+
+    def _bloom_join(
+        self,
+        files_df: DataFrame,
+        table_name: str,
+        meta: dict,
+        cols: "set[str]",
+    ) -> "DataFrame | None":
+        """``files_df`` left-joined on ``(entry_path, file_path)`` with
+        its bloom rows for ``cols``, gathered per file into one
+        ``__blooms`` array of ``(col, m, k, bits)`` structs — null for
+        a file the index does not cover. None when the index cannot
+        be read: then nothing is covered and nothing bloom-pruned."""
+        idx = self._bloom_read(table_name, meta)
+        if idx is None:
+            return None
+        bdf = (
+            idx.filter(F.col("col").isin(sorted(cols)))
+            .groupBy("entry_path", "file_path")
+            .agg(
+                F.collect_list(F.struct("col", "m", "k", "bits")).alias(
+                    "__blooms"
+                )
+            )
+        )
+        return files_df.join(bdf, ["entry_path", "file_path"], "left")
+
+    def _bloom_parts(
+        self, path: str, listing: list, columns: "list[str]"
+    ) -> list:
+        """pyarrow tables of the index parts in ``listing`` (``path``'s
+        :meth:`FileIO.list_files`), read through the FileIO seam. A
+        part that cannot be read (truncated, vacuumed mid-read) is
+        skipped: the files it held read as uncovered, as with the
+        Spark reader's ``ignoreCorruptFiles``."""
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        out = []
+        for n, _sz in listing:
+            if not n.endswith(".parquet") or os.path.basename(n).startswith(
+                ("_", ".")
+            ):
+                continue
+            try:
+                with self.io.open_input(os.path.join(path, n)) as src:
+                    out.append(papq.read_table(src, columns=columns))
+            except (OSError, pa.ArrowInvalid):
+                continue
+        return out
 
     def _bloom_map(self, table_name: str, meta: dict):
-        """The load half of :meth:`_bloom_lookup` (no predicate gate):
-        the whole index as a driver dict when it fits the byte cap,
+        """The whole index as a driver dict ``{(entry, file): {col:
+        (m, k, bits)}}`` when it fits the byte cap,
         :attr:`_BLOOM_OVERSIZE` when it doesn't, None when the dir is
-        unreadable. :meth:`bloom_coverage` folds coverage from the
-        same cached dict instead of a per-call Spark join."""
+        gone. Cached per (table, ref) — index dirs are immutable, a
+        rebuild changes the ref. :meth:`bloom_coverage` folds coverage
+        from the same cached dict instead of a per-call Spark join."""
         key = (table_name, meta["ref"])
         cached = self._bloom_cache.get(key)
         if cached is not None:
@@ -8590,65 +8626,26 @@ class CommitLogTableStore(TableStore):
         # pulled to the driver — not even once.
         try:
             listing = self.io.list_files(path)
-            disk = sum(sz for _n, sz in listing)
-        except Exception:
-            listing, disk = [], 0
-        if disk > self._BLOOM_CACHE_MAX_BYTES:
+        except OSError:
+            listing = []
+        if not listing:
+            return None  # index dir vacuumed: skip
+        if sum(sz for _n, sz in listing) > self._BLOOM_CACHE_MAX_BYTES:
             self._bloom_oversize.add(key)
             return self._BLOOM_OVERSIZE
         # The dir just passed the byte cap, so pull it driver-side
         # through the FileIO seam (pyarrow) — same rows as the Spark
         # read minus the scheduler round-trip (the read_rows_local
         # rationale; this load happens once per (table, ref) and is
-        # cached below). Any failure falls back to the Spark read.
-        rows: "list | None" = None
-        try:
-            import pyarrow.parquet as papq
-
-            parts = [
-                n
-                for n, _sz in listing
-                if n.endswith(".parquet")
-                and not os.path.basename(n).startswith(("_", "."))
-            ]
-            if parts:
-                rows = []
-                for n in parts:
-                    with self.io.open_input(os.path.join(path, n)) as src:
-                        tbl = papq.read_table(
-                            src,
-                            columns=[
-                                "entry_path", "file_path", "col",
-                                "m", "k", "bits",
-                            ],
-                        )
-                    rows.extend(tbl.to_pylist())
-        except Exception:
-            # Narrow signal on demotion: a PERSISTENT failure here
-            # (e.g. index-schema drift vs the hardcoded column list)
-            # would silently re-read via Spark on every cold load —
-            # make it observable without failing the read.
-            import logging
-
-            logging.getLogger(__name__).debug(
-                "bloom index pyarrow load failed for %s; "
-                "falling back to the Spark read",
-                path,
-                exc_info=True,
-            )
-            rows = None
-        if rows is None:
-            try:
-                rows = self.spark.read.parquet(
-                    self.io.spark_read_path(path) or path
-                ).collect()
-            except Exception:
-                return None  # index dir vacuumed/corrupt: skip
+        # cached below).
         out: dict = {}
-        for r in rows:
-            out.setdefault((r["entry_path"], r["file_path"]), {})[
-                r["col"]
-            ] = (int(r["m"]), int(r["k"]), bytes(r["bits"]))
+        for tbl in self._bloom_parts(
+            path, listing, ["entry_path", "file_path", "col", "m", "k", "bits"]
+        ):
+            for r in tbl.to_pylist():
+                out.setdefault((r["entry_path"], r["file_path"]), {})[
+                    r["col"]
+                ] = _bloom_bits(r)
         # Byte accounting from the FINAL dict: duplicate (entry, file,
         # col) rows overwrite in place, so summing raw row bytes would
         # over-state and permanently shrink effective capacity.
@@ -8682,115 +8679,23 @@ class CommitLogTableStore(TableStore):
         payload, so a cold monitoring call neither loads O(index)
         bytes nor perturbs the shared ``_bloom_cache``. Returns a set
         (empty for a vacuumed dir), or None to use the relational
-        join instead (over-cap listing or read failure)."""
+        join instead (over-cap or unlistable dir)."""
         path = self._bloom_index_path(table_name, meta)
         try:
             listing = self.io.list_files(path)
-        except Exception:
+        except OSError:
             return None
-        if (
-            sum(sz for _n, sz in listing)
-            > self._BLOOM_CACHE_MAX_BYTES
-        ):
+        if sum(sz for _n, sz in listing) > self._BLOOM_CACHE_MAX_BYTES:
             return None
-        try:
-            import pyarrow.parquet as papq
-
-            keys: set = set()
-            for n, _sz in listing:
-                if not n.endswith(".parquet") or os.path.basename(
-                    n
-                ).startswith(("_", ".")):
-                    continue
-                with self.io.open_input(os.path.join(path, n)) as src:
-                    tbl = papq.read_table(
-                        src, columns=["entry_path", "file_path"]
-                    )
-                keys.update(
-                    zip(
-                        tbl.column("entry_path").to_pylist(),
-                        tbl.column("file_path").to_pylist(),
-                    )
-                )
-            return keys
-        except Exception:
-            return None
-
-    def _bloom_probe_keys(
-        self,
-        table_name: str,
-        meta: dict,
-        preds: list,
-        candidates: list,
-    ) -> "tuple[set, int] | None":
-        """Relational bloom membership for OVERSIZE indexes: join the
-        zone-map-surviving candidate ``(entry_path, file_path)`` keys
-        against the index parquet, evaluate the DNF per file in an
-        Arrow-batched UDF, and collect only the keys that MAY match
-        (uncovered candidates keep, conservatively). Driver transfer
-        is O(survivors) — the selective-lookup case bloom exists for —
-        never O(index). Returns ``(keys_to_keep, n_uncovered)``, or
-        None when the index is unreadable (caller keeps everything)."""
-        import numpy as np
-        import pandas as pd
-
-        path = self._bloom_index_path(table_name, meta)
-        try:
-            idx = self.spark.read.parquet(
-                self.io.spark_read_path(path) or path
-            )
-        except Exception:
-            return None
-        cols = sorted(self._bloom_pred_cols(meta, preds))
-        cand = self.spark.createDataFrame(
-            list(candidates), "entry_path string, file_path string"
-        )
-        bdf = (
-            idx.filter(F.col("col").isin(cols))
-            .groupBy("entry_path", "file_path")
-            .agg(
-                F.collect_list(F.struct("col", "m", "k", "bits")).alias(
-                    "__blooms"
+        keys: set = set()
+        for tbl in self._bloom_parts(path, listing, ["entry_path", "file_path"]):
+            keys.update(
+                zip(
+                    tbl.column("entry_path").to_pylist(),
+                    tbl.column("file_path").to_pylist(),
                 )
             )
-        )
-        joined = cand.join(bdf, ["entry_path", "file_path"], "left")
-        preds_b = preds
-
-        @F.pandas_udf("boolean")
-        def _may(blooms: pd.Series) -> pd.Series:
-            from pyairbyte_spark.bloom import dnf_may_match
-
-            out = []
-            for b in blooms:
-                if isinstance(b, (list, tuple, np.ndarray)) and len(b):
-                    fb = {
-                        d["col"]: (
-                            int(d["m"]),
-                            int(d["k"]),
-                            bytes(d["bits"]),
-                        )
-                        for d in b
-                    }
-                    out.append(bool(dnf_may_match(fb, preds_b)))
-                else:  # uncovered: conservatively keep
-                    out.append(True)
-            return pd.Series(out)
-
-        kept = (
-            joined.withColumn("__keep", _may(F.col("__blooms")))
-            .filter(F.col("__keep"))
-            .select(
-                "entry_path",
-                "file_path",
-                F.col("__blooms").isNull().alias("__uncov"),
-            )
-            .collect()
-        )
-        return (
-            {(r["entry_path"], r["file_path"]) for r in kept},
-            sum(1 for r in kept if r["__uncov"]),
-        )
+        return keys
 
     def clone_table(
         self,
@@ -9945,14 +9850,7 @@ class CommitLogTableStore(TableStore):
         if snap is None:
             raise FileNotFoundError(f"table {table_name!r} does not exist")
         man = snap[1]
-        sch = man.get("schema") or next(
-            (
-                e.get("schema")
-                for e in reversed(man.get("entries") or [])
-                if e.get("schema")
-            ),
-            None,
-        )
+        sch = _newest_schema(man)
         if sch:
             try:
                 phys = [f["name"] for f in json.loads(sch)["fields"]]

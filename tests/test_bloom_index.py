@@ -195,22 +195,105 @@ def test_vacuum_reclaims_superseded_index(spark, store):
     assert store.read_where("t", [("key", "=", key)]).count() == 1
 
 
-def test_distributed_path_blooms_equivalently(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(mf, "PARQUET_CHECKPOINT_MIN_ENTRIES", 1)
-    dist = CommitLogTableStore(spark, str(tmp_path / "wh"), "main")
-    drv = CommitLogTableStore(spark, str(tmp_path / "wh"), "main")
-    _seed(spark, dist, n_files=4, per=300)
-    dist.build_bloom_index("t", ["key"])
+def _venues(spark, wh):
+    """Fresh stores over one warehouse, one per plan_scan bloom venue:
+    the driver-cached index map, the oversize index's relational probe
+    and the checkpoint sidecar frame."""
+    drv = CommitLogTableStore(spark, wh, "main")
+    ovs = CommitLogTableStore(spark, wh, "main")
+    ovs._BLOOM_CACHE_MAX_BYTES = 16  # instance override: force oversize
+    dist = CommitLogTableStore(spark, wh, "main")
     dist.DISTRIBUTED_MANIFEST_MIN_BYTES = 0
-    dist._invalidate_manifests("t")
+    return {"driver": drv, "oversize": ovs, "distributed": dist}
+
+
+def _plan_view(plan):
+    return (
+        plan["files_total"],
+        plan["files_selected"],
+        plan.get("files_bloom_uncovered"),
+        tuple(sorted(p for g in plan["groups"] for p in g["paths"] or [g["base"]])),
+    )
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"bloom-venue-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bloom venue job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan_and_rows(st, preds):
+    """One ``read_where``: the plan it ran and its ``(id, key)`` rows."""
+    plans = []
+    plan_scan = st.plan_scan
+    st.plan_scan = lambda *a, **k: plans.append(plan_scan(*a, **k)) or plans[-1]
+    rows = st.read_where("t", preds).select("id", "key").collect()
+    return plans[-1], sorted(map(tuple, rows))
+
+
+def test_distributed_path_blooms_equivalently(spark, tmp_path, monkeypatch):
+    """All three venues apply one per-file rule: equal plans, equal
+    rows, one ``files_bloom_uncovered`` (the live files without index
+    rows, as ``bloom_coverage`` counts them) — also when an index part
+    is truncated or the index dir is gone."""
+    import os
+    import shutil
+
+    monkeypatch.setattr(mf, "PARQUET_CHECKPOINT_MIN_ENTRIES", 1)
+    wh = str(tmp_path / "wh")
+    st = CommitLogTableStore(spark, wh, "main")
+    _seed(spark, st, n_files=4, per=300)
+    st.build_bloom_index("t", ["key", "id"])
+    st.write_append(_batch(spark, 5000, 5300), "t")  # uncovered
+    # Zone maps prune nothing for a key lookup; the bits prune.
     key = _key_of(spark, 700)
-    p_dist = dist.plan_scan("t", [("key", "=", key)])
-    p_drv = drv.plan_scan("t", [("key", "=", key)])
-    assert p_dist.get("distributed") is True
-    assert p_dist["files_selected"] == p_drv["files_selected"] < 4
-    a = sorted(map(tuple, dist.read_where("t", [("key", "=", key)]).collect()))
-    b = sorted(map(tuple, drv.read_where("t", [("key", "=", key)]).collect()))
-    assert a == b and len(a) == 1
+    views = {
+        n: _plan_and_rows(s, [("key", "=", key)])
+        for n, s in _venues(spark, wh).items()
+    }
+    assert views["distributed"][0].get("distributed") is True
+    assert views["driver"][0]["files_selected"] < 4
+    assert views["driver"][1] == [(700, key)]
+    assert len({(_plan_view(p), tuple(r)) for p, r in views.values()}) == 1
+    # Zone maps keep one covered file and prune the uncovered one; the
+    # uncovered count still covers every live file.
+    preds = [("id", "=", 10), ("key", "=", _key_of(spark, 10))]
+    want = [(10, _key_of(spark, 10))]
+    assert st.bloom_coverage("t")["files_uncovered"] == 1
+    assert _jobs(spark, lambda: st.plan_scan("t", preds))[1] == 0
+    views = set()
+    for n, s in _venues(spark, wh).items():
+        p, rows = _plan_and_rows(s, preds)
+        assert p["files_bloom_uncovered"] == 1 and rows == want, n
+        views.add(_plan_view(p))
+    assert len(views) == 1
+    ref = st._read_manifest("t", st.latest_version("t"))["bloom_index"]["ref"]
+    idx = os.path.join(st.table_path("t"), ref)
+    (part,) = [p for p in os.listdir(idx) if p.endswith(".parquet")]
+    # A truncated part covers nothing: its files are kept, and counted
+    # uncovered, on every venue and by bloom_coverage.
+    with open(os.path.join(idx, part), "r+b") as fh:
+        fh.truncate(10)
+    for n, s in _venues(spark, wh).items():
+        p, rows = _plan_and_rows(s, preds)
+        assert p["files_bloom_uncovered"] == 5 and rows == want, n
+        assert s.bloom_coverage("t")["files_uncovered"] == 5, n
+    # A removed index dir (vacuum of an old snapshot's index): nothing
+    # is bloom-pruned and no uncovered count is reported.
+    shutil.rmtree(idx)
+    for n, s in _venues(spark, wh).items():
+        p, rows = _plan_and_rows(s, preds)
+        assert "files_bloom_uncovered" not in p and rows == want, n
+        assert p["files_selected"] == 1, n
+        assert s.bloom_coverage("t")["files_uncovered"] == 5, n
 
 
 def test_bloom_on_bucketed_table(spark, tmp_path):
@@ -355,8 +438,16 @@ def test_oversize_index_probes_relationally(spark, store):
     assert not store._bloom_cache, "oversize index must never be cached"
     got = store.read_where("t", [("key", "=", key)]).collect()
     assert len(got) == 1 and got[0]["id"] == 1234
+    assert plan["files_bloom_uncovered"] == 0
     # absent key: everything covered prunes, nothing survives
     assert store.plan_scan("t", [("key", "=", "nope")])["files_selected"] == 0
+    # zone maps prune every file: no probe job, no uncovered count
+    p, jobs = _jobs(
+        spark,
+        lambda: store.plan_scan("t", [("key", "=", key), ("id", ">", 10**9)]),
+    )
+    assert jobs == 0 and p["files_selected"] == 0
+    assert "files_bloom_uncovered" not in p
 
 
 @pytest.mark.slow

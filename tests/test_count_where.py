@@ -224,6 +224,44 @@ def test_metadata_count_without_recorded_schema_runs_no_job(spark, store):
     assert sc.statusTracker().getJobIdsForGroup("count-no-schema") == []
 
 
+def test_distributed_count_folds_pre_stats_probe(spark, tmp_path, monkeypatch):
+    """The distributed venue counts pre-stats dir entries in its one
+    classifying aggregation: a metadata-answered predicated count
+    launches at most 3 Spark jobs (a separate pre-stats probe made it
+    4), and a pre-stats entry still degrades the call to the exact
+    pruned scan."""
+    monkeypatch.setattr(mf, "PARQUET_CHECKPOINT_MIN_ENTRIES", 1)
+    wh = str(tmp_path / "wh")
+    _seed(spark, CommitLogTableStore(spark, wh, "main"), n=2000, files=4)
+    dist = CommitLogTableStore(spark, wh, "main")
+    dist.DISTRIBUTED_MANIFEST_MIN_BYTES = 0
+    sc = spark.sparkContext
+    sc.setJobGroup("count-dist-jobs", "metadata-answered distributed count")
+    try:
+        r = dist.count_where("t", [("id", ">=", 0)])
+    finally:
+        sc.setJobGroup(None, None)
+    assert r["count"] == 2000 and r["files_scanned"] == 0
+    assert r["files_metadata"] == r["files_total"] >= 1
+    assert len(sc.statusTracker().getJobIdsForGroup("count-dist-jobs")) <= 3
+    # Drop every file list from the snapshot's checkpoint sidecar: its
+    # entries become pre-stats dir entries with nothing to classify.
+    raw = dist._read_commit_json("t", dist.latest_version("t"))
+    while mf.is_delta(raw):
+        raw = dist._read_commit_json("t", raw["base"])
+    ck = os.path.join(dist._commits_dir("t"), raw["entries_ref"])
+    with open(ck, "rb") as fh:
+        entries = mf.entries_from_parquet_bytes(fh.read())
+    for e in entries:
+        e["files"] = None
+    with open(ck, "wb") as fh:
+        fh.write(mf.entries_to_parquet_bytes(entries))
+    legacy = CommitLogTableStore(spark, wh, "main")
+    legacy.DISTRIBUTED_MANIFEST_MIN_BYTES = 0
+    r = legacy.count_where("t", [("id", "<", 500)])
+    assert r["count"] == 500 and r["files_metadata"] == 0
+
+
 def test_count_on_clone_and_branch(spark, store):
     _seed(spark, store, n=2000, files=2)
     store.clone_table("t", "c")

@@ -223,3 +223,19 @@ def test_unusable_recorded_schema_falls_back(spark, tmp_path, recorded):
 )
 def test_entry_schema_parse_errors_mean_none(sj):
     assert CommitLogTableStore._entry_schema({"schema": sj}) is None
+
+
+def test_table_columns_follow_a_column_adding_append(spark, tmp_path):
+    """The newest recorded schema wins: after an append adds a column,
+    ``table_columns`` names it as ``read()`` does, and the next commit
+    carries it in its top-level ``schema``."""
+    st = CommitLogTableStore(spark, str(tmp_path / "wh"), "m")
+    st.write_append(_df(spark, [(1, 1)]), "t")
+    st.write_append(
+        _df(spark, [(2, 2, 7)], ddl="id long, x int, w int", tag="b"), "t"
+    )
+    assert "w" in st.read("t").columns
+    assert set(st.table_columns("t")) == set(st.read("t").columns)
+    st.write_append(_df(spark, [(3, 3)], tag="c"), "t")
+    man = st._read_manifest("t", st.latest_version("t"))
+    assert "w" in [f["name"] for f in json.loads(man["schema"])["fields"]]
