@@ -8585,16 +8585,17 @@ class CommitLogTableStore(TableStore):
 
     def _bloom_parts(
         self, path: str, listing: list, columns: "list[str]"
-    ) -> list:
+    ) -> "tuple[list, bool]":
         """pyarrow tables of the index parts in ``listing`` (``path``'s
-        :meth:`FileIO.list_files`), read through the FileIO seam. A
-        part that cannot be read (truncated, vacuumed mid-read) is
-        skipped: the files it held read as uncovered, as with the
-        Spark reader's ``ignoreCorruptFiles``."""
+        :meth:`FileIO.list_files`), read through the FileIO seam, and
+        whether every part was read. A part that cannot be read
+        (truncated, vacuumed mid-read) is skipped: the files it held
+        read as uncovered, as with the Spark reader's
+        ``ignoreCorruptFiles``."""
         import pyarrow as pa
         import pyarrow.parquet as papq
 
-        out = []
+        out, complete = [], True
         for n, _sz in listing:
             if not n.endswith(".parquet") or os.path.basename(n).startswith(
                 ("_", ".")
@@ -8604,8 +8605,8 @@ class CommitLogTableStore(TableStore):
                 with self.io.open_input(os.path.join(path, n)) as src:
                     out.append(papq.read_table(src, columns=columns))
             except (OSError, pa.ArrowInvalid):
-                continue
-        return out
+                complete = False
+        return out, complete
 
     def _bloom_map(self, table_name: str, meta: dict):
         """The whole index as a driver dict ``{(entry, file): {col:
@@ -8638,14 +8639,17 @@ class CommitLogTableStore(TableStore):
         # read minus the scheduler round-trip (the read_rows_local
         # rationale; this load happens once per (table, ref) and is
         # cached below).
-        out: dict = {}
-        for tbl in self._bloom_parts(
+        tbls, complete = self._bloom_parts(
             path, listing, ["entry_path", "file_path", "col", "m", "k", "bits"]
-        ):
+        )
+        out: dict = {}
+        for tbl in tbls:
             for r in tbl.to_pylist():
                 out.setdefault((r["entry_path"], r["file_path"]), {})[
                     r["col"]
                 ] = _bloom_bits(r)
+        if not complete:
+            return out  # not cached: a transient read error may clear
         # Byte accounting from the FINAL dict: duplicate (entry, file,
         # col) rows overwrite in place, so summing raw row bytes would
         # over-state and permanently shrink effective capacity.
@@ -8688,7 +8692,10 @@ class CommitLogTableStore(TableStore):
         if sum(sz for _n, sz in listing) > self._BLOOM_CACHE_MAX_BYTES:
             return None
         keys: set = set()
-        for tbl in self._bloom_parts(path, listing, ["entry_path", "file_path"]):
+        tbls, _complete = self._bloom_parts(
+            path, listing, ["entry_path", "file_path"]
+        )
+        for tbl in tbls:
             keys.update(
                 zip(
                     tbl.column("entry_path").to_pylist(),
